@@ -238,6 +238,26 @@ object Bench {
       .flatMap(s => scala.util.Try(s.toDouble).toOption)
       .getOrElse(math.max(4.0, cpus.toDouble / 8))
 
+  /** `{"query":"error",...}` for the stdout tail and `BENCH_FULL.json`:
+    * a query that threw (while warming up or timed) is listed, with the
+    * phase and the first line of its error, instead of only dropping out
+    * of `total`. Messages are cut to 200 characters so the tail keeps
+    * its summary fields.
+    */
+  def failedJson(failed: Seq[(String, String)]): String =
+    failed.map { case (q, err) => s"${jsonString(q)}:${jsonString(err.take(200))}" }
+      .mkString("{", ",", "}")
+
+  private def jsonString(v: String): String = "\"" + v.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => "\\u%04x".format(c.toInt)
+    case c => c.toString
+  } + "\""
+
+  private def firstLine(t: Throwable): String =
+    s"${t.getClass.getSimpleName}: ${String.valueOf(t.getMessage).linesIterator.nextOption().getOrElse("")}"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -255,6 +275,10 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // first failure per query, in order: "phase: Class: message"
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def fail(name: String, phase: String, t: Throwable): Unit =
+      if (!failed.contains(name)) failed(name) = s"$phase: ${firstLine(t)}"
 
     // Warm every query shape at the smallest SF: whole-stage codegen
     // compilation and classloading are per-plan-shape one-time costs
@@ -263,7 +287,7 @@ object Bench {
     selected.filter(SparkEntry.queries.contains).foreach { name =>
       try SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case t: Throwable => fail(name, "warmup", t) }
     }
 
     val (priorFile, prior) = selectPrior(new java.io.File("."), sfDir)
@@ -298,13 +322,13 @@ object Bench {
     val quietFloor = load1().exists(_ <= gateThresh)
 
     val loadStart = loadavg()
-    def timeOnce(name: String): Double = {
+    def timeOnce(name: String, phase: String): Double = {
       val t0 = System.nanoTime()
       val ok = try {
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         true
-      } catch { case _: Throwable => false }
+      } catch { case t: Throwable => fail(name, phase, t); false }
       val sec = (System.nanoTime() - t0) / 1e9
       // fan-out stages persist their shared input; drop it so cached
       // blocks from one query don't skew the next measurement
@@ -319,8 +343,8 @@ object Bench {
     // twice puts ~a battery-length between a query's two samples, so a
     // spike has to persist across both to survive the min.
     val names = selected.filter(SparkEntry.queries.contains)
-    val pass1 = names.map(n => n -> timeOnce(n)).toMap
-    val pass2 = names.map(n => n -> timeOnce(n)).toMap
+    val pass1 = names.map(n => n -> timeOnce(n, "pass1")).toMap
+    val pass2 = names.map(n => n -> timeOnce(n, "pass2")).toMap
     def minOf(a: Double, b: Double): Double =
       if (a < 0) b else if (b < 0) a else math.min(a, b)
 
@@ -334,7 +358,7 @@ object Bench {
       val v = prior.get(n) match {
         case Some(b) if b > 0 && min2 > 1.4 * b =>
           remeasured += n
-          val t3 = timeOnce(n)
+          val t3 = timeOnce(n, "remeasure")
           if (t3 >= 0) math.min(min2, t3) else min2
         case _ => min2
       }
@@ -359,6 +383,8 @@ object Bench {
     val qs = jmap(results)
     val total = results.map(_._2).filter(_ >= 0).sum
     val rm = remeasured.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedMap = failedJson(failed.toSeq)
+    val parallelism = spark.sparkContext.defaultParallelism
 
     // FULL artifact: both passes, minima, priors, per-query prior ratios
     // (raw and control-normalized) — a script computes every
@@ -376,7 +402,7 @@ object Bench {
       f""""loadavg_start":"$loadStart","loadavg_end":"$loadEnd",""" +
       f""""prior_file":"$priorFile","remeasured":$rm,""" +
       f""""control":{"name":"$controlQuery","sec":$ctrlSec%.3f,"prior_sec":$ctrlPrior%.3f,"drift":$ctrlDrift%.4f},""" +
-      f""""total":$total%.3f,""" +
+      f""""total":$total%.3f,"failed":$failedMap,"defaultParallelism":$parallelism,""" +
       s""""pass1":${jmap(names.map(n => n -> pass1(n)))},""" +
       s""""pass2":${jmap(names.map(n => n -> pass2(n)))},""" +
       s""""prior":${jmap(priorSeq)},""" +
@@ -390,7 +416,7 @@ object Bench {
     // the driver's wrapper records only a stdout tail (2000 chars — it
     // truncated the FRONT of this line in r16), so the machine-adjudication
     // fields must sit at the end to survive.
-    val json = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","loadavg_start":"$loadStart","loadavg_end":"$loadEnd","remeasured":$rm,"passes":2,"quiet_floor":$quietFloor,"quiet_gate_waited_sec":$gateWaitedSec,"prior_file":"$priorFile","control":{"name":"$controlQuery","sec":$ctrlSec%.3f,"prior_sec":$ctrlPrior%.3f,"drift":$ctrlDrift%.4f},"full":"BENCH_FULL.json"}"""
+    val json = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","loadavg_start":"$loadStart","loadavg_end":"$loadEnd","remeasured":$rm,"passes":2,"quiet_floor":$quietFloor,"quiet_gate_waited_sec":$gateWaitedSec,"prior_file":"$priorFile","control":{"name":"$controlQuery","sec":$ctrlSec%.3f,"prior_sec":$ctrlPrior%.3f,"drift":$ctrlDrift%.4f},"full":"BENCH_FULL.json","failed":$failedMap,"cpus":$cpus,"defaultParallelism":$parallelism}"""
     println(json)
     // Belt-and-braces for the driver: stdout can be decorated by the build
     // tool, the file cannot.

@@ -58,14 +58,16 @@ object ErrorChannel {
 
   /** Mark rows matching `cond` (and not already dead) as errored. */
   def markWhere(df: DataFrame, stage: StageId, cond: Column, msg: Column,
-                timeout: Boolean = false, canceled: Boolean = false): DataFrame = {
-    val withErr = ensure(df)
-    withErr.withColumn(
-      ColName,
-      when(col(ColName).isNull && cond, errValue(stage, msg, timeout, canceled))
-        .otherwise(col(ColName))
-    )
-  }
+                timeout: Boolean = false, canceled: Boolean = false): DataFrame =
+    ensure(df).withColumn(ColName, marked(stage, cond, msg, timeout, canceled))
+
+  /** The `_err` value after marking rows where `cond` holds: a row already
+    * dead keeps its error, and a NULL `cond` leaves the row healthy.
+    */
+  def marked(stage: StageId, cond: Column, msg: Column,
+             timeout: Boolean = false, canceled: Boolean = false): Column =
+    when(col(ColName).isNull && cond, errValue(stage, msg, timeout, canceled))
+      .otherwise(col(ColName))
 
   /** IsTimeout/IsCanceled accessors (`error.go:68-84`): null-safe — healthy
     * rows read false.
@@ -124,12 +126,15 @@ object ErrorChannel {
     }
 
   /** Guard a per-row transform so it only applies to healthy rows. */
-  def onGood(df: DataFrame)(colName: String, value: Column): DataFrame = {
+  def onGood(df: DataFrame)(colName: String, value: Column): DataFrame =
     if (!hasChannel(df)) df.withColumn(colName, value)
-    else {
-      val prev: Column =
-        if (df.columns.contains(colName)) col(colName) else lit(null)
-      df.withColumn(colName, when(col(ColName).isNull, value).otherwise(prev))
-    }
+    else df.withColumn(colName, guarded(df, colName, value, col(ColName).isNull))
+
+  /** `value` where `ok` holds; elsewhere the column's current value in
+    * `df` (NULL for a new column).
+    */
+  def guarded(df: DataFrame, colName: String, value: Column, ok: Column): Column = {
+    val prev: Column = if (df.columns.contains(colName)) col(colName) else lit(null)
+    when(ok, value).otherwise(prev)
   }
 }

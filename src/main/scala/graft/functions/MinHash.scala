@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -532,10 +533,12 @@ case class BandHashes(child: Expression, bands: Int) extends UnaryExpression {
   * re-hashing of the full signatures.
   *
   * Null slots never agree (band hashes from [[BandHashes]] are non-null;
-  * the guard covers SQL-registered misuse). Mismatched lengths fail
-  * LOUDLY — two frames banded with different parameters meeting in one
-  * join is a pipeline bug, and a silently filterable result would drop
-  * pairs (ADVICE r21 #1/#2).
+  * the guard covers SQL-registered misuse). Mismatched lengths and a NULL
+  * array fail LOUDLY — two frames banded with different parameters, or a
+  * row that lost its band hashes, meeting in one join is a pipeline bug,
+  * and a NULL or otherwise filterable result would silently drop the
+  * pair in the `a.band === first_equal_slot(...)` filter (ADVICE r21
+  * #1/#2, r22 #1). The result is therefore never NULL.
   */
 case class FirstEqualSlot(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
@@ -550,8 +553,19 @@ case class FirstEqualSlot(left: Expression, right: Expression)
         s"got ${left.dataType.sql} and ${right.dataType.sql}")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any =
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any = {
+    val a = left.eval(input)
+    val b = right.eval(input)
+    if (a == null || b == null) throw nullArray(a == null)
     route(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  }
+
+  def nullArray(leftIsNull: Boolean): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"first_equal_slot: NULL band-hash array (${if (leftIsNull) left.sql else right.sql}) " +
+        "— a banded row without band hashes would silently drop its pairs")
 
   def route(x: ArrayData, y: ArrayData): Int = {
     val n = x.numElements()
@@ -570,8 +584,16 @@ case class FirstEqualSlot(left: Expression, right: Expression)
   override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
                                    ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
       : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
     val ref = ctx.addReferenceObj("fes", this, classOf[FirstEqualSlot].getName)
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.route($a, $b);")
+    val a = left.genCode(ctx)
+    val b = right.genCode(ctx)
+    ev.copy(code = code"""
+      ${a.code}
+      ${b.code}
+      if (${a.isNull} || ${b.isNull}) throw $ref.nullArray(${a.isNull});
+      int ${ev.value} = $ref.route(${a.value}, ${b.value});""", isNull = FalseLiteral)
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =

@@ -2,6 +2,8 @@ package graft.runtime
 
 import graft.core._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 /** C16 Pipeline — semantic wrapper + runner (`pipeline.go:33-100`): gives
@@ -18,8 +20,14 @@ final class Pipeline(val id: StageId, val root: Stage, val bus: SignalBus = Sign
     * row-count observations tagged with THIS bus — and stages composed
     * outside any pipeline attach none (no CollectMetrics barrier in plain
     * plans; see RowSignals for why that matters for pushdown).
+    *
+    * The input is first spread over the session by [[Pipeline.spread]]
+    * when it is a narrow plan over file scans with fewer splits than
+    * `defaultParallelism`. Spark cannot split a parquet row group, so a
+    * batch written as one row group otherwise runs every stage of the
+    * pipeline as a single task on one core. Any other input keeps its plan.
     */
-  def plan(df: DataFrame): DataFrame = RowSignals.scoped(bus)(root(df))
+  def plan(df: DataFrame): DataFrame = RowSignals.scoped(bus)(root(Pipeline.spread(df)))
 
   def planTree: PlanNode = PlanNode("Pipeline", id, Seq(root.plan))
   def planJson: String = planTree.toJson
@@ -87,4 +95,29 @@ final class PipelineException(val pipeline: StageId, val path: String, val msg: 
 
 object Pipeline {
   def apply(name: String, root: Stage): Pipeline = new Pipeline(StageId(name), root)
+
+  /** `df` repartitioned round-robin to `defaultParallelism` when it is a
+    * narrow plan (no exchange) whose leaves are all file scans yielding
+    * fewer splits in total than that; otherwise `df` itself. The
+    * by-number repartition is deliberate: AQE never coalesces it, while
+    * a rebalance would be coalesced straight back to one partition. Its
+    * single exchange moves the input once. An input with enough splits,
+    * an exchange, or a non-file leaf (a cache, a local relation, a
+    * stream) is never touched, so nothing changes for large inputs.
+    */
+  private[runtime] def spread(df: DataFrame): DataFrame =
+    if (df.isStreaming) df
+    else {
+      val width = df.sparkSession.sparkContext.defaultParallelism
+      val plan = df.queryExecution.executedPlan
+      val leaves = plan.collectLeaves()
+      val scans = leaves.collect { case s: FileSourceScanExec => s }
+      val narrow = scans.nonEmpty && scans.size == leaves.size &&
+        !plan.exists(_.isInstanceOf[Exchange])
+      // every non-empty file is at least one split: count splits only
+      // when there are fewer files than cores
+      def fewSplits = scans.map(_.selectedPartitions.totalNumberOfFiles).sum < width &&
+        scans.map(_.inputRDD.getNumPartitions).sum < width
+      if (narrow && fewSplits) df.repartition(width) else df
+    }
 }

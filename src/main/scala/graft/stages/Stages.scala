@@ -53,9 +53,21 @@ object Where {
 
 /** P2 Apply — fallible transformation (`apply.go:37-59`). `outs` compute new
   * columns; rows where `errWhen` holds get a typed `_err` (path = this
-  * stage, message from `msg`) instead of failing the whole job. Fail-fast
+  * stage, message from `msg`) instead of failing the whole job. A row whose
+  * `errWhen` is NULL stays healthy and gets its outputs. Fail-fast
   * semantics are restored at action time by `PipelineRunner.failFast`
   * (one dead-letter count check per action, not per stage).
+  *
+  * One projection writes `_err` and the outputs: each output is guarded by
+  * the INPUT `_err` and the inlined `errWhen`, not by the new `_err`. A
+  * second projection reading the new `_err` cannot be collapsed into the
+  * first (it reads `_err` more than once), so a parse shared by `errWhen`
+  * and an output — qp2's `get_json_object` — ran twice per row; in one
+  * projection, whole-stage codegen's subexpression elimination evaluates
+  * it once. An output that reads or repeats the name of an earlier output
+  * starts a further projection guarded by the new `_err`, so it sees the
+  * earlier value as chained `withColumn`s would. Replaced columns keep
+  * their position; new ones follow `_err` in `outs` order.
   */
 final case class Apply(
     id: StageId,
@@ -65,16 +77,55 @@ final case class Apply(
 ) extends Stage {
   def apply(df: DataFrame): DataFrame = {
     val ensured = ErrorChannel.ensure(df)
-    val marked = ErrorChannel.markWhere(ensured, id, errWhen, msg)
-    outs.foldLeft(marked) { case (d, (name, value)) =>
-      ErrorChannel.onGood(d)(name, value)
-    }
+    val healthy = col(ErrorChannel.ColName).isNull
+    val runs = Apply.projections(outs)
+    val marked = Apply.project(ensured, runs.head, healthy && !coalesce(errWhen, lit(false)),
+      ErrorChannel.ColName -> ErrorChannel.marked(id, errWhen, msg))
+    runs.tail.foldLeft(marked)((d, run) => Apply.project(d, run, healthy))
   }
 }
 
 object Apply {
   def apply(name: String, errWhen: Column, msg: String)(outs: (String, Column)*): Apply =
     Apply(StageId(name), outs, errWhen, lit(msg))
+
+  private def project(df: DataFrame, outs: Seq[(String, Column)], ok: Column,
+                      marked: (String, Column)*): DataFrame = {
+    val cols = marked ++ outs.map { case (name, value) =>
+      name -> ErrorChannel.guarded(df, name, value, ok)
+    }
+    // a ListMap keeps `outs` order for the appended columns
+    df.withColumns(scala.collection.immutable.ListMap(cols: _*))
+  }
+
+  /** Split `outs` into runs that can share one projection. A run ends
+    * before an output that repeats one of its names (or, in the first run,
+    * `_err`) or may read one of them. Splitting more than needed only
+    * costs a projection, so names compare case-insensitively and an
+    * output whose references cannot be listed (a star) always starts a run.
+    */
+  private[stages] def projections(outs: Seq[(String, Column)]): List[Seq[(String, Column)]] =
+    outs.foldLeft(Vector(Vector.empty[(String, Column)])) { (runs, out) =>
+      val names = runs.last.map(o => lower(o._1)).toSet
+      val clash = names(lower(out._1)) ||
+        (runs.size == 1 && lower(out._1) == lower(ErrorChannel.ColName))
+      val reads = names.nonEmpty && references(out._2).forall(_.exists(names))
+      if (clash || reads) runs :+ Vector(out) else runs.init :+ (runs.last :+ out)
+    }.toList
+
+  private def lower(s: String): String = s.toLowerCase(java.util.Locale.ROOT)
+
+  /** First name parts of the columns `c` reads; None when it may read any. */
+  private def references(c: Column): Option[Set[String]] = {
+    import org.apache.spark.sql.catalyst.analysis.{Star, UnresolvedAttribute, UnresolvedRegex}
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    val e = org.apache.spark.sql.graft.Bridge.convertedExpression(c)
+    if (e.exists { case _: Star | _: UnresolvedRegex => true; case _ => false }) None
+    else Some(e.collect {
+      case a: UnresolvedAttribute => lower(a.nameParts.head)
+      case a: Attribute => lower(a.name)
+    }.toSet)
+  }
 }
 
 /** P3 Effect — side effect observing the stream; data passes through

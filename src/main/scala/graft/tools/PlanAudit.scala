@@ -459,11 +459,18 @@ object PlanAudit {
     * never shuffle" is the load-bearing 100 TB claim for the media and
     * pooling operators.
     */
+  /** `once` lists tokens that must occur EXACTLY once in the OPTIMIZED
+    * plan: a parse pinned to one evaluation per row
+    * (`CsvLines.parseOnce`), which a Spark upgrade that pushed the
+    * `_err` filter through the parse projection again would silently
+    * turn back into two or three parses per line.
+    */
   final case class Shape(maxShuffles: Int = Int.MaxValue,
                          forbid: Seq[String] = Nil,
                          require: Seq[String] = Nil,
                          maxScans: Int = Int.MaxValue,
-                         noWideShuffle: Boolean = false)
+                         noWideShuffle: Boolean = false,
+                         once: Seq[String] = Nil)
 
   private val bhj = Seq("BroadcastHashJoin")
   private val noSmj = Seq("SortMergeJoin")
@@ -487,8 +494,8 @@ object PlanAudit {
     "ql46_pii_redact" -> Shape(1),
     "ql48_c4_filters" -> Shape(1, require = Seq("c4_clean_lines")),
     "ql51_winnowing" -> Shape(1),
-    "qx12_jsonl_roundtrip" -> Shape(1),
-    "qx13_csv_roundtrip" -> Shape(1),
+    "qx12_jsonl_roundtrip" -> Shape(1, once = Seq("from_json(")),
+    "qx13_csv_roundtrip" -> Shape(1, once = Seq("from_csv(")),
     "ql56_mixture_sample" -> Shape(1, forbid = noSmj, require = bhj),
     "ql59_sentences" -> Shape(1),
     // broadcast-dim claims: the fact/corpus side must not shuffle for

@@ -3,6 +3,7 @@ package graft.functions
 import graft.SparkSpec
 import graft.llm.Dedup
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 class MinHashSpec extends SparkSpec {
   import spark.implicits._
@@ -226,6 +227,29 @@ class MinHashSpec extends SparkSpec {
         .select(MinHash.bandHashes(col("mh"), 2)).collect()
     }
     assert(ex2.getMessage != null)
+  }
+
+  test("first_equal_slot fails loudly on a NULL band-hash array (no silent pair drop)") {
+    // ADVICE r22 #1: a NULL result makes `a.band === first_equal_slot(...)`
+    // NULL, and the band-join filter would drop the pair without a word
+    // a range, not a local relation, so the filter runs in generated code
+    val df = spark.range(2).select(
+      when(col("id") === 0, array(lit(1L), lit(2L))).as("x"),
+      array(lit(1L), lit(2L)).as("y"))
+    for ((a, b) <- Seq((col("x"), col("y")), (col("y"), col("x")))) {
+      val ex = intercept[Exception] {
+        df.filter(lit(0) === MinHash.firstEqualSlot(a, b)).collect()
+      }
+      assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("NULL band-hash array")), ex)
+    }
+    // the interpreted path raises too
+    val interpreted = FirstEqualSlot(
+      org.apache.spark.sql.catalyst.expressions.Literal.create(null, ArrayType(LongType)),
+      org.apache.spark.sql.catalyst.expressions.Literal.create(
+        org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(Array(1L)), ArrayType(LongType)))
+    intercept[IllegalArgumentException](interpreted.eval())
+    assert(!interpreted.nullable)
   }
 
   test("first-band filtered candidates equal the dropDuplicates form (uncapped)") {

@@ -2,7 +2,7 @@ package graft.runtime
 
 import graft.SparkSpec
 import graft.core._
-import graft.combinators.Sequence
+import graft.combinators.{Filter, Sequence}
 import graft.stages.{Apply, Transform}
 import org.apache.spark.sql.functions._
 
@@ -51,5 +51,88 @@ class PipelineSpec extends SparkSpec {
     val json = parsePipe.planJson
     assert(json.contains("\"kind\":\"Pipeline\""))
     assert(json.contains("\"name\":\"parse\""))
+  }
+
+  // --- input spread: a one-row-group batch must not run on one core ---
+
+  private def parquet(tag: String)(write: String => Unit): String = {
+    val path = java.nio.file.Files.createTempDirectory(tag).toString + "/in"
+    write(path)
+    path
+  }
+
+  private def events = spark.range(0, 4000, 1, 4).select(col("id"),
+    when(col("id") % 50 === 0, lit("""{"j":1}"""))
+      .otherwise(to_json(struct(col("id").as("k")))).as("props"))
+
+  /** One parquet file, one row group: a single split. */
+  private lazy val oneFile = parquet("spread_one")(events.coalesce(1).write.parquet(_))
+  /** One file per core: already as many splits as `defaultParallelism`. */
+  private lazy val fourFiles = parquet("spread_four")(events.write.parquet(_))
+
+  private def spreadPipe(bus: SignalBus) = {
+    val k = get_json_object(col("props"), "$.k")
+    new Pipeline(StageId("spread"), Sequence("etl")(
+      Apply("parse", k.isNull, "props has no k")("k" -> k.cast("int")),
+      Filter("big", col("k") > 3000, Transform("flag")("big" -> lit(true)))), bus)
+  }
+
+  private def exchanges(df: org.apache.spark.sql.DataFrame): Int =
+    """(?m)^[\s+:*-]*Exchange """.r.findAllIn(df.queryExecution.executedPlan.toString).size
+
+  /** Row counts of the Filter's first observed action on `bus`. */
+  private def filterCounts(bus: SignalBus)(action: => Unit): Map[String, String] = {
+    bus.clear()
+    action
+    val deadline = System.currentTimeMillis + 10000
+    def rows = bus.emitted(Signals.FilterPassed).filter(_.fields.get("phase").contains("rows"))
+    while (System.currentTimeMillis < deadline && rows.isEmpty) Thread.sleep(100)
+    rows.map(_.fields.filter(_._1.startsWith("rows_"))).headOption.getOrElse(Map.empty)
+  }
+
+  test("plan spreads a single-split file input over every core with the same results") {
+    val spreadBus = new SignalBus(logCapacity = 64)
+    val directBus = new SignalBus(logCapacity = 64)
+    val p = spreadPipe(spreadBus)
+    val in = spark.read.parquet(oneFile)
+    assert(in.rdd.getNumPartitions == 1)
+    val spread = p.plan(in)
+    val direct = RowSignals.scoped(directBus)(p.root(in))
+    assert(spread.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+    assert(direct.rdd.getNumPartitions == 1)
+
+    RowSignals.attach(spark, directBus)
+    try {
+      val spreadCounts = filterCounts(spreadBus)(
+        p.run(spark)(spread.write.format("noop").mode("overwrite").save()))
+      val directCounts = filterCounts(directBus)(
+        direct.write.format("noop").mode("overwrite").save())
+      assert(spreadCounts.nonEmpty && spreadCounts == directCounts)
+    } finally {
+      p.detachRowSignals(spark)
+      RowSignals.detach(spark, directBus)
+    }
+    val good = rowsOf(ErrorChannel.good(spread))
+    assert(good.size == 4000 - 80)
+    assert(good == rowsOf(ErrorChannel.good(direct)))
+    def deadLetters(df: org.apache.spark.sql.DataFrame) =
+      rowsOf(ErrorChannel.dead(df).select(col("id"), col("_err.path"), col("_err.msg")))
+    assert(deadLetters(spread).size == 80)
+    assert(deadLetters(spread) == deadLetters(direct))
+    assert(deadLetters(spread).forall(_(1).asInstanceOf[scala.collection.Seq[String]].last == "parse"))
+  }
+
+  test("plan leaves inputs with enough splits, an exchange or no file scan as they are") {
+    val p = spreadPipe(new SignalBus(logCapacity = 64))
+    val inputs = Seq(
+      "four splits" -> spark.read.parquet(fourFiles),
+      "an exchange" -> spark.read.parquet(oneFile).repartition(2),
+      "no file scan" -> events.coalesce(1))
+    for ((what, in) <- inputs) {
+      assert(Pipeline.spread(in) eq in, what)
+      assert(exchanges(p.plan(in)) == exchanges(p.root(in)), what)
+    }
+    assert(exchanges(p.plan(spark.read.parquet(oneFile))) ==
+      exchanges(p.root(spark.read.parquet(oneFile))) + 1)
   }
 }

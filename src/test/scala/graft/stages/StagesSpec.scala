@@ -2,6 +2,7 @@ package graft.stages
 
 import graft.SparkSpec
 import graft.core._
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class StagesSpec extends SparkSpec {
@@ -59,5 +60,65 @@ class StagesSpec extends SparkSpec {
     val msg = SafeLambda.sanitize(new RuntimeException("a\tb\nSTACK" + "x" * 500))
     assert(!msg.contains("\n") && !msg.contains("\t"))
     assert(msg.length <= 256)
+  }
+
+  // --- Apply: one projection for `_err` and the outputs ---
+
+  /** The two-projection form Apply replaced: mark `_err`, then guard each
+    * output by the NEW `_err`, one `withColumn` at a time.
+    */
+  private def chainedApply(df: DataFrame, name: String, errWhen: Column, msg: String,
+                           outs: (String, Column)*): DataFrame =
+    outs.foldLeft(ErrorChannel.markWhere(df, StageId(name), errWhen, lit(msg))) {
+      case (d, (n, v)) => ErrorChannel.onGood(d)(n, v)
+    }
+
+  test("Apply evaluates a parse shared by errWhen and an output once per row") {
+    val calls = spark.sparkContext.longAccumulator("apply_parse_calls")
+    val parse = udf { (s: String) =>
+      calls.add(1)
+      scala.util.Try(Integer.valueOf(s)).getOrElse(null): Integer
+    }
+    val in = spark.range(0, 1000, 1, 2).select(col("id"),
+      when(col("id") % 10 === 0, lit("x")).otherwise(col("id").cast("string")).as("raw"))
+    val out = Apply("parse", parse(col("raw")).isNull, "not a number")(
+      "n" -> (parse(col("raw")) * 2))(in)
+    out.write.format("noop").mode("overwrite").save()
+    assert(calls.value == 1000L, s"parse ran ${calls.value} times for 1000 rows")
+    assert(ErrorChannel.dead(out).count() == 100)
+    assert(ErrorChannel.good(out).filter(col("n") =!= col("id") * 2).count() == 0)
+  }
+
+  test("Apply keeps the chained form's schema, column order, values and NULL-errWhen rule") {
+    val in = Seq((1, "5", 0.5), (2, "x", 1.5), (3, null, 2.5)).toDF("id", "raw", "w")
+    val k = expr("try_cast(raw AS INT)")
+    // NULL raw makes errWhen NULL: that row stays healthy and gets outputs;
+    // "m" reads the earlier output "n", "w" is replaced in place
+    val errWhen = col("raw") === "x"
+    val outs = Seq("w" -> (k * 2.0), "n" -> k, "m" -> (col("n") + 1), "tag" -> lit("z"))
+    val fused = Apply("parse", errWhen, "not a number")(outs: _*)(in)
+    val chained = chainedApply(in, "parse", errWhen, "not a number", outs: _*)
+    assert(fused.columns.toSeq == Seq("id", "raw", "w", "_err", "n", "m", "tag"))
+    assert(fused.schema == chained.schema)
+    def view(df: DataFrame) = rowsOf(df.select(col("id"), col("w"), col("n"), col("m"),
+      col("tag"), col("_err.path"), col("_err.msg")))
+    assert(view(fused) == view(chained))
+    assert(view(fused) == Set(
+      Seq(1, 10.0, 5, 6, "z", null, null),
+      Seq(2, 1.5, null, null, null, Seq("parse"), "not a number"),
+      Seq(3, null, null, null, "z", null, null)))
+    // rows already dead keep their error and skip the outputs
+    val dead = ErrorChannel.markWhere(in, StageId("up"), col("id") === 1, lit("upstream"))
+    val again = Apply("parse", errWhen, "not a number")(outs: _*)(dead)
+    assert(view(again) == view(chainedApply(dead, "parse", errWhen, "not a number", outs: _*)))
+  }
+
+  test("Apply shares one projection unless an output reads or repeats an earlier one") {
+    def runs(outs: (String, Column)*) = Apply.projections(outs).map(_.map(_._1))
+    assert(runs("a" -> lit(1), "b" -> col("x"), "c" -> expr("x + 1")) == List(Seq("a", "b", "c")))
+    assert(runs("a" -> lit(1), "b" -> expr("A + 1"), "a" -> lit(2), "c" -> col("b")) ==
+      List(Seq("a"), Seq("b", "a"), Seq("c")))
+    assert(runs("a" -> lit(1), "s" -> struct(col("*"))) == List(Seq("a"), Seq("s")))
+    assert(runs("_err" -> lit(null)) == List(Nil, Seq("_err")))
   }
 }

@@ -121,4 +121,16 @@ class BenchPriorSpec extends AnyFunSuite {
     assert(file == "BENCH_r12.json")
     assert(prior.size >= 20)
   }
+
+  test("failedJson lists each failing query with its error as valid JSON") {
+    import org.json4s._
+    val msg = "warmup: AnalysisException: column \"x\" not found in C:\\tmp\tend"
+    val txt = graft.Bench.failedJson(Seq("ql6_minhash_candidates" -> msg, "qa1" -> ("e" * 500)))
+    val parsed = org.json4s.jackson.JsonMethods.parse(txt) match {
+      case JObject(fields) => fields.collect { case (k, JString(v)) => k -> v }.toMap
+      case other => fail(s"not an object: $other")
+    }
+    assert(parsed == Map("ql6_minhash_candidates" -> msg, "qa1" -> "e" * 200))
+    assert(graft.Bench.failedJson(Nil) == "{}")
+  }
 }

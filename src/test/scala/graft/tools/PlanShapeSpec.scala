@@ -17,8 +17,8 @@ class PlanShapeSpec extends SparkSpec {
   test("every audited plan shape holds: shuffle budget, required and forbidden operators") {
     val failures = PlanAudit.shapes.toSeq.sortBy(_._1).flatMap { case (name, shape) =>
       try {
-        val plan = graft.SparkEntry.queries(name)(spark, sf)
-          .queryExecution.executedPlan.toString
+        val qe = graft.SparkEntry.queries(name)(spark, sf).queryExecution
+        val plan = qe.executedPlan.toString
         val shuffles = shuffleLine.findAllIn(plan).size
         val over =
           if (shuffles > shape.maxShuffles)
@@ -36,7 +36,12 @@ class PlanShapeSpec extends SparkSpec {
           .map(op => s"$name: required operator $op absent")
         val present = shape.forbid.filter(plan.contains)
           .map(op => s"$name: forbidden operator $op present")
-        over ++ overScans ++ missing ++ present
+        val optimized = qe.optimizedPlan.toString
+        val notOnce = shape.once.flatMap { tok =>
+          val n = java.util.regex.Pattern.quote(tok).r.findAllIn(optimized).size
+          if (n == 1) Nil else Seq(s"$name: $tok occurs $n times in the optimized plan, not once")
+        }
+        over ++ overScans ++ missing ++ present ++ notOnce
       } catch {
         case e: Exception => Seq(s"$name: failed to plan: ${e.getMessage}")
       }
