@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.PlanNode
 import org.apache.spark.sql.SparkSession
 
 /** BENCH entry (driver contract): runs the headline queries on
@@ -245,15 +246,8 @@ object Bench {
     * its summary fields.
     */
   def failedJson(failed: Seq[(String, String)]): String =
-    failed.map { case (q, err) => s"${jsonString(q)}:${jsonString(err.take(200))}" }
+    failed.map { case (q, err) => s""""${PlanNode.escape(q)}":"${PlanNode.escape(err.take(200))}"""" }
       .mkString("{", ",", "}")
-
-  private def jsonString(v: String): String = "\"" + v.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => "\\u%04x".format(c.toInt)
-    case c => c.toString
-  } + "\""
 
   private def firstLine(t: Throwable): String =
     s"${t.getClass.getSimpleName}: ${String.valueOf(t.getMessage).linesIterator.nextOption().getOrElse("")}"

@@ -2,6 +2,7 @@ package graft.combinators
 
 import graft.core._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.storage.StorageLevel
 
 import java.util.concurrent.{Executors, TimeUnit}
@@ -39,6 +40,15 @@ object Fanout {
     * branches must be able to spill, `SURVEY.md §7.4.6`).
     */
   def share(df: DataFrame): DataFrame = df.persist(StorageLevel.MEMORY_AND_DISK)
+
+  private[combinators] val reduced = new scala.util.DynamicVariable[Option[java.util.Queue[DataFrame]]](None)
+
+  /** Compose `body`, adding to `into` every shared input that a lazy
+    * [[Concurrent]] reducer composed in it joins. A runner materializes
+    * them before its actions (see `runtime.Pipeline.run`).
+    */
+  def collectReduced[A](into: java.util.Queue[DataFrame])(body: => A): A =
+    reduced.withValue(Some(into))(body)
 
   /** Tracks a stage's persisted fan-out inputs so `close()` can release
     * them — without this, long-lived drivers accumulate cached inputs
@@ -86,8 +96,13 @@ final case class Concurrent(
     val outs = branches.map(_(shared))
     SignalBus.global.emit(Signals.ConcurrentCompleted, id, "branches" -> branches.size.toString)
     reducer match {
-      case Some(r) => ErrorChannel.prependPath(r(shared, outs), id)
-      case None    => shared
+      case Some(r) =>
+        val out = r(shared, outs)
+        // a join over branches of the shared input is a self-join of its cache
+        if (persistInput && out.queryExecution.analyzed.exists(_.isInstanceOf[Join]))
+          Fanout.reduced.value.foreach(_.add(shared))
+        ErrorChannel.prependPath(out, id)
+      case None => shared
     }
   }
 

@@ -42,15 +42,7 @@ final case class PlanNode(
 
   /** Compact JSON (no external deps; values escaped). */
   def toJson: String = {
-    def esc(s: String): String = s.flatMap {
-      case '"'          => "\\\""
-      case '\\'         => "\\\\"
-      case '\n'         => "\\n"
-      case '\r'         => "\\r"
-      case '\t'         => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c            => c.toString
-    }
+    import PlanNode.{escape => esc}
     val attrJson =
       if (attrs.isEmpty) ""
       else
@@ -61,5 +53,19 @@ final case class PlanNode(
       if (children.isEmpty) ""
       else children.map(_.toJson).mkString(""","children":[""", ",", "]")
     s"""{"kind":"${esc(kind)}","name":"${esc(id.name)}"$attrJson$childJson}"""
+  }
+}
+
+object PlanNode {
+
+  /** `s` escaped for the inside of a JSON string literal. */
+  def escape(s: String): String = s.flatMap {
+    case '"'          => "\\\""
+    case '\\'         => "\\\\"
+    case '\n'         => "\\n"
+    case '\r'         => "\\r"
+    case '\t'         => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c            => c.toString
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** C16 Pipeline — semantic wrapper + runner (`pipeline.go:33-100`): gives
   * the stage graph a stable pipeline UUID and stamps each run with a fresh
@@ -23,16 +24,40 @@ final class Pipeline(val id: StageId, val root: Stage, val bus: SignalBus = Sign
     *
     * The input is first spread over the session by [[Pipeline.spread]]
     * when it is a narrow plan over file scans with fewer splits than
-    * `defaultParallelism`. Spark cannot split a parquet row group, so a
+    * `defaultParallelism` and at least one AQE minimum partition (1 MB by
+    * default) of files. Spark cannot split a parquet row group, so a
     * batch written as one row group otherwise runs every stage of the
     * pipeline as a single task on one core. Any other input keeps its plan.
+    * The shared inputs of joining `Concurrent` reducers composed here are
+    * kept for [[run]] to materialize.
     */
-  def plan(df: DataFrame): DataFrame = RowSignals.scoped(bus)(root(Pipeline.spread(df)))
+  def plan(df: DataFrame): DataFrame =
+    graft.combinators.Fanout.collectReduced(unmaterialized) {
+      RowSignals.scoped(bus)(root(Pipeline.spread(df)))
+    }
+
+  /** Shared inputs of `Concurrent` reducers composed by [[plan]] and not
+    * yet materialized by [[run]].
+    */
+  private val unmaterialized = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
   def planTree: PlanNode = PlanNode("Pipeline", id, Seq(root.plan))
   def planJson: String = planTree.toJson
 
-  /** Run an action under this pipeline's job group with a per-run UUID. */
+  /** Run an action under this pipeline's job group with a per-run UUID.
+    *
+    * Before `body`, the run materializes, one job each, the shared input
+    * of every `Concurrent` reducer that [[plan]] composed and that joins
+    * its branches. Such a join is a self-join of the shared cache. Planned
+    * before the cache exists, AQE sizes both sides from the cache's
+    * estimate and re-plans as soon as the first of the two cache stages
+    * finishes, so which side it broadcasts depends on which stage reports
+    * first: on the etl_events benchmark it broadcast the 100,000-row wide
+    * side (a 16.8 MB hash relation, left in the block manager until a
+    * garbage collection lets Spark's cleaner drop it) in about a third of
+    * the batches. Materialized, the cache has its real size, and every
+    * action of the run plans the join the same way.
+    */
   def run[A](spark: SparkSession)(body: => A): A = {
     val runUuid = java.util.UUID.randomUUID()
     val sc = spark.sparkContext
@@ -41,6 +66,8 @@ final class Pipeline(val id: StageId, val root: Stage, val bus: SignalBus = Sign
     bus.emit(Signals.PipelineStarted, id, "run" -> runUuid.toString)
     val t0 = System.nanoTime()
     try {
+      var shared = unmaterialized.poll()
+      while (shared != null) { shared.count(); shared = unmaterialized.poll() }
       val a = body
       bus.emit(Signals.PipelineCompleted, id,
         "run" -> runUuid.toString,
@@ -77,7 +104,7 @@ final class Pipeline(val id: StageId, val root: Stage, val bus: SignalBus = Sign
     }
   }
 
-  def close(): Unit = root.close()
+  def close(): Unit = { unmaterialized.clear(); root.close() }
 
   /** Release the row-signal bridge registered by [[run]] for this
     * pipeline's bus — the teardown for per-pipeline buses on a long-lived
@@ -98,7 +125,12 @@ object Pipeline {
 
   /** `df` repartitioned round-robin to `defaultParallelism` when it is a
     * narrow plan (no exchange) whose leaves are all file scans yielding
-    * fewer splits in total than that; otherwise `df` itself. The
+    * fewer splits in total than that and holding at least
+    * `spark.sql.adaptive.coalescePartitions.minPartitionSize` (1 MB by
+    * default) of files; otherwise `df` itself. A smaller input is less
+    * than one partition by AQE's own measure and does not repay the
+    * shuffle: on `local[4]` the etl_events pipeline over a one-file batch
+    * of 14 KB took 12% longer spread, while one of 90 KB broke even. The
     * by-number repartition is deliberate: AQE never coalesces it, while
     * a rebalance would be coalesced straight back to one partition. Its
     * single exchange moves the input once. An input with enough splits,
@@ -114,10 +146,12 @@ object Pipeline {
       val scans = leaves.collect { case s: FileSourceScanExec => s }
       val narrow = scans.nonEmpty && scans.size == leaves.size &&
         !plan.exists(_.isInstanceOf[Exchange])
+      def big = scans.map(_.selectedPartitions.totalFileSize).sum >=
+        df.sparkSession.sessionState.conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
       // every non-empty file is at least one split: count splits only
       // when there are fewer files than cores
       def fewSplits = scans.map(_.selectedPartitions.totalNumberOfFiles).sum < width &&
         scans.map(_.inputRDD.getNumPartitions).sum < width
-      if (narrow && fewSplits) df.repartition(width) else df
+      if (narrow && big && fewSplits) df.repartition(width) else df
     }
 }

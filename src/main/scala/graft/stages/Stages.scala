@@ -66,8 +66,11 @@ object Where {
   * projection, whole-stage codegen's subexpression elimination evaluates
   * it once. An output that reads or repeats the name of an earlier output
   * starts a further projection guarded by the new `_err`, so it sees the
-  * earlier value as chained `withColumn`s would. Replaced columns keep
-  * their position; new ones follow `_err` in `outs` order.
+  * earlier value as chained `withColumn`s would. A nondeterministic
+  * `errWhen` is not inlined: `_err` is written first and every output is
+  * guarded by it, so each row runs `errWhen` once and never gets both an
+  * error and its outputs. Replaced columns keep their position; new ones
+  * follow `_err` in `outs` order.
   */
 final case class Apply(
     id: StageId,
@@ -78,10 +81,15 @@ final case class Apply(
   def apply(df: DataFrame): DataFrame = {
     val ensured = ErrorChannel.ensure(df)
     val healthy = col(ErrorChannel.ColName).isNull
+    val err = ErrorChannel.ColName -> ErrorChannel.marked(id, errWhen, msg)
     val runs = Apply.projections(outs)
-    val marked = Apply.project(ensured, runs.head, healthy && !coalesce(errWhen, lit(false)),
-      ErrorChannel.ColName -> ErrorChannel.marked(id, errWhen, msg))
-    runs.tail.foldLeft(marked)((d, run) => Apply.project(d, run, healthy))
+    val fused = Apply.project(ensured, runs.head, healthy && !coalesce(errWhen, lit(false)), err)
+    // a nondeterministic errWhen inlined in the guards would run twice per
+    // row and could disagree with `_err`: its outputs read the new `_err`
+    val (marked, rest) =
+      if (Apply.deterministicErr(fused)) (fused, runs.tail)
+      else (Apply.project(ensured, Nil, healthy, err), runs)
+    rest.foldLeft(marked)((d, run) => Apply.project(d, run, healthy))
   }
 }
 
@@ -112,6 +120,15 @@ object Apply {
       val reads = names.nonEmpty && references(out._2).forall(_.exists(names))
       if (clash || reads) runs :+ Vector(out) else runs.init :+ (runs.last :+ out)
     }.toList
+
+  /** Whether the `_err` that `df`'s top projection writes is deterministic. */
+  private def deterministicErr(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    df.queryExecution.analyzed.expressions.forall {
+      case a: Alias if a.name == ErrorChannel.ColName => a.deterministic
+      case _ => true
+    }
+  }
 
   private def lower(s: String): String = s.toLowerCase(java.util.Locale.ROOT)
 

@@ -90,13 +90,23 @@ class PipelineSpec extends SparkSpec {
     rows.map(_.fields.filter(_._1.startsWith("rows_"))).headOption.getOrElse(Map.empty)
   }
 
+  private val MinPartition = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+  /** Run `body` with AQE's minimum partition size, the spread's floor, set. */
+  private def withMinPartition[A](bytes: Long)(body: => A): A = {
+    val prev = spark.conf.get(MinPartition)
+    spark.conf.set(MinPartition, bytes.toString)
+    try body finally spark.conf.set(MinPartition, prev)
+  }
+
   test("plan spreads a single-split file input over every core with the same results") {
     val spreadBus = new SignalBus(logCapacity = 64)
     val directBus = new SignalBus(logCapacity = 64)
     val p = spreadPipe(spreadBus)
     val in = spark.read.parquet(oneFile)
     assert(in.rdd.getNumPartitions == 1)
-    val spread = p.plan(in)
+    // the test file is a few KB: a one-byte floor lets it spread
+    val spread = withMinPartition(1)(p.plan(in))
     val direct = RowSignals.scoped(directBus)(p.root(in))
     assert(spread.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
     assert(direct.rdd.getNumPartitions == 1)
@@ -128,11 +138,42 @@ class PipelineSpec extends SparkSpec {
       "four splits" -> spark.read.parquet(fourFiles),
       "an exchange" -> spark.read.parquet(oneFile).repartition(2),
       "no file scan" -> events.coalesce(1))
-    for ((what, in) <- inputs) {
+    // a one-byte floor: only the plan's shape keeps these inputs as they are
+    for ((what, in) <- inputs) withMinPartition(1) {
       assert(Pipeline.spread(in) eq in, what)
       assert(exchanges(p.plan(in)) == exchanges(p.root(in)), what)
     }
-    assert(exchanges(p.plan(spark.read.parquet(oneFile))) ==
+    assert(withMinPartition(1)(exchanges(p.plan(spark.read.parquet(oneFile)))) ==
       exchanges(p.root(spark.read.parquet(oneFile))) + 1)
+  }
+
+  test("plan spreads no input smaller than AQE's minimum partition size") {
+    val in = spark.read.parquet(oneFile)
+    val bytes = new java.io.File(oneFile).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    assert(bytes > 0 && bytes < (1L << 20)) // below the 1 MB default
+    assert(Pipeline.spread(in) eq in)
+    withMinPartition(bytes + 1)(assert(Pipeline.spread(in) eq in))
+    withMinPartition(bytes)(assert(Pipeline.spread(in).rdd.getNumPartitions ==
+      spark.sparkContext.defaultParallelism))
+  }
+
+  test("run materializes the shared input of a joining Concurrent reducer before its actions") {
+    import graft.combinators.Concurrent
+    val p = Pipeline("fan", Concurrent.reduced("scores", (_, outs) =>
+      outs(0).join(outs(1).select(col("id"), col("b")), Seq("id")))(
+      Transform("a")("a" -> col("id") * 2),
+      Transform("b")("b" -> (col("id") + 1))))
+    def cached = spark.sparkContext.getRDDStorageInfo.map(_.numCachedPartitions).sum
+    val before = cached
+    try {
+      val out = p.plan(spark.range(0, 1000, 1, 4).toDF())
+      assert(cached == before, "plan runs no job")
+      val (atStart, n) = p.run(spark)((cached, out.count()))
+      assert(atStart == before + 4, "the shared input is cached before the body's first action")
+      assert(n == 1000)
+      // a second run of the same plan has nothing left to materialize
+      assert(p.run(spark)(cached) == before + 4)
+    } finally p.close()
   }
 }

@@ -89,6 +89,23 @@ class StagesSpec extends SparkSpec {
     assert(ErrorChannel.good(out).filter(col("n") =!= col("id") * 2).count() == 0)
   }
 
+  test("Apply runs a nondeterministic errWhen once per row and never both marks and computes") {
+    val calls = spark.sparkContext.longAccumulator("apply_flaky_calls")
+    // one partition, so the task's copy of `n` flips on every call: a
+    // second evaluation per row would always disagree with the first
+    val n = new java.util.concurrent.atomic.AtomicLong()
+    val flaky = udf { () => calls.add(1); n.incrementAndGet() % 2 == 0 }.asNondeterministic()
+    val out = Apply("flaky", flaky(), "flaked")("v" -> (col("id") + 1))(spark.range(0, 1000, 1, 1).toDF())
+      .cache()
+    try {
+      assert(out.count() == 1000)
+      assert(calls.value == 1000L, s"errWhen ran ${calls.value} times for 1000 rows")
+      assert(ErrorChannel.dead(out).filter(col("v").isNotNull).count() == 0)
+      assert(ErrorChannel.good(out).filter(col("v").isNull).count() == 0)
+      assert(ErrorChannel.dead(out).count() == 500)
+    } finally out.unpersist()
+  }
+
   test("Apply keeps the chained form's schema, column order, values and NULL-errWhen rule") {
     val in = Seq((1, "5", 0.5), (2, "x", 1.5), (3, null, 2.5)).toDF("id", "raw", "w")
     val k = expr("try_cast(raw AS INT)")
