@@ -1,7 +1,6 @@
 package graft
 
 import graft.core.PlanNode
-import org.apache.spark.sql.SparkSession
 
 /** BENCH entry (driver contract): runs the headline queries on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query and total
@@ -239,36 +238,39 @@ object Bench {
       .flatMap(s => scala.util.Try(s.toDouble).toOption)
       .getOrElse(math.max(4.0, cpus.toDouble / 8))
 
+  /** The first three fields of `/proc/loadavg` ("1m 5m 15m"), or "" where
+    * the file cannot be read; stamped at the start and end of a run.
+    */
+  def loadavg(): String =
+    try new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("/proc/loadavg")),
+      java.nio.charset.StandardCharsets.UTF_8).trim.split(" ").take(3).mkString(" ")
+    catch { case _: Throwable => "" }
+
   /** `{"query":"error",...}` for the stdout tail and `BENCH_FULL.json`:
     * a query that threw (while warming up or timed) is listed, with the
     * phase and the first line of its error, instead of only dropping out
     * of `total`. Messages are cut to 200 characters so the tail keeps
-    * its summary fields.
+    * its summary fields. [[Verify.dump]] writes its `failed.json` with it.
     */
   def failedJson(failed: Seq[(String, String)]): String =
     failed.map { case (q, err) => s""""${PlanNode.escape(q)}":"${PlanNode.escape(err.take(200))}"""" }
       .mkString("{", ",", "}")
 
-  private def firstLine(t: Throwable): String =
+  /** "Class: first line of message" for a failure report. */
+  def firstLine(t: Throwable): String =
     s"${t.getClass.getSimpleName}: ${String.valueOf(t.getMessage).linesIterator.nextOption().getOrElse("")}"
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus()
     // Optional subset arg (comma-separated query names) for quiet-machine
     // re-measurement of individual outliers without the full-run cost; the
     // driver invokes with no args and measures the full headline list.
     val selected: Seq[String] =
       if (args.nonEmpty) headline.filter(args(0).split(',').toSet)
       else headline
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     // first failure per query, in order: "phase: Class: message"
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def fail(name: String, phase: String, t: Throwable): Unit =
@@ -285,11 +287,6 @@ object Bench {
     }
 
     val (priorFile, prior) = selectPrior(new java.io.File("."), sfDir)
-    def loadavg(): String =
-      try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")),
-        java.nio.charset.StandardCharsets.UTF_8).trim.split(" ").take(3).mkString(" ")
-      catch { case _: Throwable => "" }
 
     // QUIET-FLOOR GATE (VERDICT r15 #3): the committed BENCH artifact must
     // BE a quiet-floor run, not a loaded run plus a BASELINE footnote —
@@ -305,7 +302,7 @@ object Bench {
     // masquerading as clean is the exact failure the stamp exists for
     def load1(): Option[Double] = loadavg().split(" ").headOption
       .flatMap(s => scala.util.Try(s.toDouble).toOption)
-    val gateThresh = loadThreshold(cpus.toInt, sys.env.get)
+    val gateThresh = loadThreshold(cpus, sys.env.get)
     val waitBudgetSec = sys.env.get("SPARK_GRAFT_LOAD_WAIT_SEC")
       .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(1200)
     var gateWaitedSec = 0

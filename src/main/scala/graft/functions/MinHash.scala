@@ -11,9 +11,10 @@ import org.apache.spark.sql.types._
 /** Fused md5-derived 60-bit token ids: element j = the first 15 hex
   * nibbles of md5(token_j) as an unsigned long — bit-identical to the HOF
   * form `transform(toks, t => conv(substring(md5(t), 1, 15), 16, 10)
-  * .cast(long))` (`Dedup.tokenIds64Hof`, the bit-exactness spec), but one
-  * digest + an 8-byte big-endian read per token instead of five
-  * interpreted expression dispatches plus a hex round-trip (digest →
+  * .cast(long))` (`HofForms.tokenIds64Hof` in the tests, the
+  * bit-exactness spec), but one digest + an 8-byte big-endian read per
+  * token instead of five interpreted expression dispatches plus a hex
+  * round-trip (digest →
   * 32-char hex string → substring → string-parse). Null tokens map to
   * null ids (md5-of-null parity).
   */
@@ -223,9 +224,10 @@ case class MinHashSignature(child: Expression, numHashes: Int)
 /** Fused 64-bit SimHash (Charikar): per token ONE xxhash64, each bit votes
   * ±1, output = sign vector as 0/1 ints.
   *
-  * Bit-identical to the HOF reference (`Dedup.simHashBitsHof`) — which
-  * recomputes `xxhash64(token)` once per BIT (64× redundant hashing) and
-  * folds 64-element arrays through interpreted lambdas per token. The
+  * Bit-identical to the HOF reference (`HofForms.simHashBitsHof` in the
+  * tests) — which recomputes `xxhash64(token)` once per BIT (64×
+  * redundant hashing) and folds 64-element arrays through interpreted
+  * lambdas per token. The
   * fused form hashes each token once and votes in a tight loop.
   */
 case class SimHashBits64(child: Expression) extends UnaryExpression {
@@ -376,7 +378,7 @@ case class MinHashAgreement(left: Expression, right: Expression)
   * Why it exists: a pair whose signatures collide in k bands came out of
   * the LSH band self-join k times, and the batch path deduplicated those
   * copies with `dropDuplicates(doc_a, doc_b)` — a full Exchange plus two
-  * HashAggregates over every collision row (MetricsProbe at sf0.1: the
+  * HashAggregates over every collision row (tools/Probe at sf0.1: the
   * measured majority of ql6 after the scan). All k copies are IDENTICAL
   * rows, and each carries both full signatures — so each row can decide
   * locally whether ITS band is the pair's first agreeing band and only
@@ -447,10 +449,10 @@ case class MinHashFirstBand(left: Expression, right: Expression, bands: Int)
 /** Fused LSH banding projection: element b = xxhash64 of the signature's
   * b-th equal-width slice — bit-identical to the HOF form
   * `transform(sequence(0, bands-1), b => xxhash64(slice(sig, b*r+1, r)))`
-  * (`Dedup.bandHashesHof`, the bit-exactness spec; fold from seed 42,
-  * null slots skipped — the XxHash64-over-array chain), but one tight
-  * loop per row instead of `bands` interpreted lambdas each allocating
-  * an r-element slice (optimization round 22, guide §4).
+  * (`HofForms.bandHashesHof` in the tests, the bit-exactness spec; fold
+  * from seed 42, null slots skipped — the XxHash64-over-array chain), but
+  * one tight loop per row instead of `bands` interpreted lambdas each
+  * allocating an r-element slice (optimization round 22, guide §4).
   *
   * Emitting the band-hash ARRAY (instead of only posexploding it away)
   * is what lets the collision rows downstream decide the pair's first

@@ -585,7 +585,7 @@ object Native {
 }
 
 /** Session extension installing the engine's native functions:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * `withExtensions(new GraftExtensions)` on a session builder, or
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * per slot plus a second array copy. Tokenization rides the scan of
   * every text-analysis query (MinHash signatures, token counts, quality
   * flags, BM25/TF-IDF postings, LM/NB features), so the interpreted HOF
-  * was the single widest per-row cost in the LLM surface (MetricsProbe:
+  * was the single widest per-row cost in the LLM surface (tools/Probe:
   * the ql67 corpus tokenize stage alone was ~1.3 s of its 2.4 s at
   * sf0.1).
   *

@@ -14,8 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * interpreted slices) → distinct minima.
   *
   * Bit-identical to the HOF reference
-  * (`TextAnalysis.winnowingFingerprintsHof`): gram strings join tokens
-  * with " ", hashes are `xxhash64(gram)` (seed 42), `len < window`
+  * (`HofForms.winnowingFingerprintsHof` in the tests): gram strings join
+  * tokens with " ", hashes are `xxhash64(gram)` (seed 42), `len < window`
   * degenerates to one whole-array window, empty gram lists yield an empty
   * sketch.
   */

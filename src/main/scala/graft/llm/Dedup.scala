@@ -21,17 +21,12 @@ object Dedup {
 
   /** Normalized token array of a text column — the fused native
     * tokenizer (`functions/Tokens.scala` `TokensWs`, one byte pass, real
-    * codegen); [[tokensHof]] is the reference HOF form it must bit-match
-    * (`TokensSpec`). Tokenization rides the scan of every text query, so
+    * codegen); the test-side `HofForms.tokensHof` is the reference HOF
+    * form it must bit-match (`TokensSpec`). Tokenization rides the scan of every text query, so
     * the interpreted `filter` lambda here was the widest per-row cost in
     * the LLM surface (optimization round 21).
     */
   def tokens(text: Column): Column = graft.functions.Tokens.tokensWs(text)
-
-  /** Reference HOF form (regex split + interpreted empty-filter; kept for
-    * the bit-exactness spec).
-    */
-  def tokensHof(text: Column): Column = filter(split(text, " "), t => t =!= "")
 
   /** Canonical token-set signature: md5 of the sorted distinct tokens
     * joined — two docs share it iff their token *sets* are identical
@@ -61,15 +56,11 @@ object Dedup {
     * seeded xxhash64; entry i = min over tokens of h_i(token). Computed by
     * the fused native expression (`functions/MinHash.scala`) — one loop
     * per row instead of two nested interpreted lambdas per (seed, token);
-    * [[minHashHof]] is the reference HOF form it must bit-match.
+    * the test-side `HofForms.minHashHof` is the reference HOF form it must
+    * bit-match.
     */
   def minHash(tokensCol: Column, numHashes: Int): Column =
     graft.functions.MinHash.signature(tokensCol, numHashes)
-
-  /** Reference HOF form (interpreted; kept for the bit-exactness spec). */
-  def minHashHof(tokensCol: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      i => array_min(transform(tokensCol, t => xxhash64(i, t))))
 
   /** 64-bit token ids from md5: the first 15 hex digits (60 bits) of
     * md5(token) parsed as a BIGINT — computable identically in any SQL
@@ -86,31 +77,12 @@ object Dedup {
   def tokenIds64(tokensCol: Column): Column =
     graft.functions.MinHash.md5TokenIds64(tokensCol)
 
-  /** Reference HOF form (interpreted digest→hex→substring→parse per
-    * token; kept for the bit-exactness spec).
-    */
-  def tokenIds64Hof(tokensCol: Column): Column =
-    transform(tokensCol,
-      t => conv(substring(md5(t.cast("binary")), 1, 15), 16, 10).cast("long"))
-
-  /** HOF reference over token ids (bit-exactness spec for the long path). */
-  def minHashHofLong(tokenIdsCol: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      i => array_min(transform(tokenIdsCol, t => xxhash64(i, t))))
-
   /** Estimated Jaccard similarity from two MinHash signatures — fused
-    * native agreement count ([[minHashSimilarityHof]] is the interpreted
-    * reference it must bit-match).
+    * native agreement count (the test-side `HofForms.minHashSimilarityHof`
+    * is the interpreted reference it must bit-match).
     */
   def minHashSimilarity(mhA: Column, mhB: Column, numHashes: Int): Column =
     graft.functions.MinHash.agreement(mhA, mhB).cast("double") / numHashes
-
-  /** Reference HOF form (two interpreted lambdas per slot; kept for the
-    * bit-exactness property).
-    */
-  def minHashSimilarityHof(mhA: Column, mhB: Column, numHashes: Int): Column =
-    aggregate(zip_with(mhA, mhB, (a, b) => when(a === b, 1).otherwise(0)),
-      lit(0), (acc, x) => acc + x).cast("double") / numHashes
 
   /** MinHash + LSH banding candidate pairs: signatures are cut into
     * `bands` bands of `numHashes/bands` rows; docs colliding in ANY band
@@ -203,16 +175,6 @@ object Dedup {
       .withColumn("bha", graft.functions.MinHash.bandHashes(col("mh"), bands))
       .select(col("id"), col("mh"), col("bha"), posexplode(col("bha")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
-
-  /** Reference HOF banding form (interpreted `bands` lambdas, each
-    * allocating an r-element slice; kept for the bit-exactness spec —
-    * [[graft.functions.BandHashes]] must match it exactly).
-    */
-  private[graft] def bandHashesHof(sig: Column, numHashes: Int, bands: Int): Column = {
-    val r = numHashes / bands
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(slice(sig, b * lit(r) + 1, lit(r))))
-  }
 
   /** Candidate-pair join over a banded-signature table: band-key
     * collisions scored inside the join (see [[minHashLshCandidates]] for
@@ -477,25 +439,11 @@ object Dedup {
     * sign vector packs into a bit array. Near-dup candidates collide on a
     * 16-bit band (≈ Hamming distance ≤ 3 across 4 bands guarantee).
     * Fused native expression (`functions/MinHash.scala` `SimHashBits64`):
-    * one hash per token instead of one per (token, bit); [[simHashBitsHof]]
-    * is the HOF reference it must bit-match.
+    * one hash per token instead of one per (token, bit); the test-side
+    * `HofForms.simHashBitsHof` is the HOF reference it must bit-match.
     */
   def simHashBits(tokensCol: Column): Column =
     graft.functions.MinHash.simHashBits(tokensCol)
-
-  /** Reference HOF form (interpreted, 64x redundant hashing; kept for the
-    * bit-exactness spec).
-    */
-  def simHashBitsHof(tokensCol: Column): Column = {
-    val votes = aggregate(
-      tokensCol,
-      array((0 until 64).map(_ => lit(0L)): _*),
-      (acc, t) => zip_with(acc,
-        array((0 until 64).map(i =>
-          when(xxhash64(t).bitwiseAND(lit(1L << i)) =!= 0, 1L).otherwise(-1L)): _*),
-        (a, b) => a + b))
-    transform(votes, v => when(v > 0, 1).otherwise(0))
-  }
 
   /** SimHash band candidates: `bands` bands × 64/`bands` bits (default
     * 4 × 16 ≈ Hamming ≤ 3 guarantee). `tokensOf` swaps the tokenization

@@ -106,7 +106,7 @@ object Pipelines {
     // joins, the bucket window, and (incrementally) the lm/nb trainers —
     // and each uncached read re-ran the repetition semi-join + the C4
     // line battery + four redactPii regex passes + the quality score on
-    // top of the gate cache (the Ql50Probe-measured majority of the
+    // top of the gate cache (the tools/Probe-measured majority of the
     // pipeline's final pass). Survivor-sized like the gate cut,
     // MEMORY_AND_DISK so a large survivor set spills instead of OOMing.
     val scrubbed = lined

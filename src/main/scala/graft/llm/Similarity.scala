@@ -48,9 +48,6 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Reference (HOF) form — interpreted per element; kept for doc/tests. */
-  def cosineHof(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Default cosine: the fused native codegen expression
     * ([[graft.functions.Native]]) — identical float64 index-order
     * semantics, ~10x less per-row overhead than the interpreted HOF chain.
@@ -749,7 +746,7 @@ object Similarity {
     // work — and the top-k aggregation over it — otherwise runs on 1-2
     // cores while the rest idle; the partial ObjectHashAggregate then
     // also holds EVERY query's buffer in those tasks, tripping the
-    // >128-group sort fallback (MetricsProbe: numTasksFallBacked>0). The
+    // >128-group sort fallback (tools/Probe: numTasksFallBacked>0). The
     // round-robin exchange moves only the ≤maxRows input rows — O(n)
     // bytes to parallelize O(n²) compute, favorable at ANY scale of this
     // bounded operator — and drops groups-per-task under the hash-agg

@@ -783,36 +783,6 @@ object TextAnalysis {
   def gopherQualityFlags(text: Column): Column =
     graft.functions.TextStats.gopherFlags(text)
 
-  /** Reference HOF form (interpreted lambdas + a regex Matcher per token;
-    * kept for the bit-exactness spec — `TextStatsSpec`).
-    */
-  def gopherQualityFlagsHof(text: Column): Column = {
-    val toks = Dedup.tokensHof(text)
-    val nTok = size(toks).cast("long")
-    val sumLen = aggregate(toks, lit(0L), (a, t) => a + length(t).cast("long"))
-    val lines = filter(transform(split(text, "\n"), l => trim(l)), l => l =!= "")
-    val nLines = size(lines).cast("long")
-    val bullets = size(filter(lines, l =>
-      l.startsWith("- ") || l.startsWith("* ") || l.startsWith("•"))).cast("long")
-    val ellipsis = size(filter(lines,
-      l => l.endsWith("...") || l.endsWith("…"))).cast("long")
-    val alphaToks = size(filter(toks, t => t.rlike("\\p{L}"))).cast("long")
-    val hashes = (length(text) - length(translate(text, "#", ""))).cast("long")
-    // '…' counts as an ellipsis symbol (Gopher counts both forms):
-    // translate to '...' first, then count triples — on both engine and
-    // oracle sides, so the flags stay bit-exact
-    val dotsText = regexp_replace(text, "…", "...")
-    val dots = floor((length(dotsText) -
-      length(regexp_replace(dotsText, "\\.\\.\\.", ""))).cast("double") / 3.0).cast("long")
-    struct(
-      (nTok >= 50L && nTok <= 100000L).as("ok_length"),
-      (nTok > 0L && sumLen >= nTok * 3L && sumLen <= nTok * 10L).as("ok_word_len"),
-      ((hashes + dots) * 10L < nTok).as("ok_symbols"),
-      (bullets * 10L <= nLines * 9L).as("ok_bullets"),
-      (ellipsis * 10L <= nLines * 3L).as("ok_ellipsis"),
-      (alphaToks * 5L >= nTok * 4L).as("ok_alpha"))
-  }
-
   /** Gopher REPETITION battery (the published filter's other half —
     * [[gopherQualityFlags]] covers the quality rules): per-document
     * duplicate-line / duplicate-paragraph fractions (count and character
@@ -942,18 +912,6 @@ object TextAnalysis {
     */
   def c4CleanLines(text: Column, minWords: Int = 5): Column =
     graft.functions.TextStats.c4CleanLines(text, minWords)
-
-  /** Reference HOF form (a nested interpreted lambda battery per line;
-    * kept for the bit-exactness spec — `TextStatsSpec`).
-    */
-  def c4CleanLinesHof(text: Column, minWords: Int = 5): Column = {
-    val lines = filter(transform(split(text, "\n"), l => trim(l)), l => l =!= "")
-    val kept = filter(lines, l =>
-      (l.endsWith(".") || l.endsWith("!") || l.endsWith("?") || l.endsWith("\"")) &&
-        size(filter(split(l, " "), t => t =!= "")) >= minWords &&
-        !lower(l).contains("javascript"))
-    concat_ws("\n", kept)
-  }
 
   /** C4 page-level flags over the [[c4CleanLines]] output: at least
     * `minSentences` sentences survive cleaning (terminal-punctuation
@@ -1175,18 +1133,6 @@ object TextAnalysis {
     */
   def winnowingFingerprints(text: Column, k: Int = 5, window: Int = 4): Column =
     graft.functions.Winnow.fingerprints(Dedup.tokens(text), k, window)
-
-  /** Reference HOF form (interpreted, O(n·window) slice minima; kept for
-    * the bit-exactness spec).
-    */
-  def winnowingFingerprintsHof(text: Column, k: Int = 5, window: Int = 4): Column = {
-    val grams = Dedup.wordNgrams(text, k) // distinct word k-grams in doc order
-    val hashes = transform(grams, g => xxhash64(g))
-    val nWin = greatest(size(hashes) - (window - 1), lit(1))
-    when(size(hashes) === 0, array().cast("array<bigint>"))
-      .otherwise(array_distinct(transform(sequence(lit(1), nWin),
-        i => array_min(slice(hashes, i, lit(window))))))
-  }
 
   /** Bigram language-model scoring with STUPID BACKOFF — the CCNet-style
     * perplexity filter (Wenzek et al., "CCNet: Extracting High Quality

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit artifact: dump `.explain("formatted")` for the
   * queries whose plan shape carries the 100 TB argument, so a reviewer
   * can see the pushed filters / broadcasts / partial aggregates / codegen
@@ -765,14 +763,8 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // a fixed width, not the machine's: PLANS.md is compared across machines
+    val spark = graft.GraftSession.local(4)
     println("# Physical-plan audit")
     println()
     // ASCII only: the console encoding in batch runs mangles non-ASCII

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** NN-Descent recall at 10× (VERDICT r7 #7): the graph build's quality
@@ -30,15 +29,7 @@ object RecallBench {
     val maxIters = if (args.length > 5) args(5).toInt else 2
     val buildK = if (args.length > 6) args(6).toInt else 0 // 0 = operator default
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus())
 
     if (!new java.io.File(s"$out/_DONE").exists())
       ScaleBench.generate(spark, base, out, copies)

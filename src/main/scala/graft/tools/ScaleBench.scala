@@ -363,15 +363,8 @@ object ScaleBench {
     // whose scan parallelism differs from Spark-written multi-file output —
     // timing against them would measure file layout, not data scaling
     val base1x = s"$out-1x"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.GraftSession.cpus()
+    val spark = graft.GraftSession.local(cpus)
 
     if (!new java.io.File(s"$out/_DONE").exists()) generate(spark, base, out, copies)
     if (!new java.io.File(s"$base1x/_DONE").exists()) generate(spark, base, base1x, 1)
@@ -867,14 +860,14 @@ object ScaleBench {
       val (_, n1, b1) = imageSetup(base1x)
       val (_, nN, bN) = imageSetup(out)
       val tN = rows.find(_._1 == "image_decode").get._3
-      val mbpsCore = bN / 1e6 / tN / cpus.toInt
+      val mbpsCore = bN / 1e6 / tN / cpus
       details += f""""image_decode_detail":{"images_1x":$n1,"mb_1x":${b1 / 1e6}%.1f,"images_${copies}x":$nN,"mb_${copies}x":${bN / 1e6}%.1f,"decode_mb_per_sec_per_core_${copies}x":$mbpsCore%.2f}"""
     }
     if (rows.exists(_._1 == "audio_decode")) {
       val (_, n1, b1) = audioSetup(base1x)
       val (_, nN, bN) = audioSetup(out)
       val tN = rows.find(_._1 == "audio_decode").get._3
-      val mbpsCore = bN / 1e6 / tN / cpus.toInt
+      val mbpsCore = bN / 1e6 / tN / cpus
       details += f""""audio_decode_detail":{"clips_1x":$n1,"mb_1x":${b1 / 1e6}%.1f,"clips_${copies}x":$nN,"mb_${copies}x":${bN / 1e6}%.1f,"decode_mb_per_sec_per_core_${copies}x":$mbpsCore%.2f}"""
     }
     if (rows.exists(_._1 == "perceptual_cap")) {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measured evidence for the streaming twins' bounded-state contract
@@ -43,16 +42,9 @@ object StreamStateBench {
     val copies = if (args.length > 2) args(2).toInt else 10
     val cap = if (args.length > 3) args(3).toInt else 4
     val filesPerCopy = 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus())
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
 
     // corpora: 1x rewritten (equal file layout), Nx verbatim (id shift only)
@@ -108,12 +100,7 @@ object StreamStateBench {
         "wall_sec" -> wall)
     }
 
-    def loadavg(): String =
-      try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")),
-        java.nio.charset.StandardCharsets.UTF_8).trim.split(" ").take(3).mkString(" ")
-      catch { case _: Throwable => "" }
-    val loadStart = loadavg()
+    val loadStart = graft.Bench.loadavg()
 
     // warm the plan shape once (codegen/classloading), untimed
     run(dir1x, 1, Int.MaxValue)
@@ -129,7 +116,7 @@ object StreamStateBench {
         .map { case (k, v) => f""""$k":$v%.2f""" }.mkString(",")
       s""""$name":{$fields}"""
     }.mkString("{", ",",
-      s""","copies":$copies,"cap":$cap,"loadavg_start":"$loadStart","loadavg_end":"${loadavg()}"}""")
+      s""","copies":$copies,"cap":$cap,"loadavg_start":"$loadStart","loadavg_end":"${graft.Bench.loadavg()}"}""")
     println(json)
     spark.stop()
   }

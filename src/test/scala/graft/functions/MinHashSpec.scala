@@ -14,7 +14,7 @@ class MinHashSpec extends SparkSpec {
       .filter(size(col("toks")) > 0)
     val both = docs.select(
       Dedup.minHash(col("toks"), 64).as("native"),
-      Dedup.minHashHof(col("toks"), 64).as("hof"))
+      HofForms.minHashHof(col("toks"), 64).as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() == 0)
     assert(both.count() == 200)
   }
@@ -25,7 +25,7 @@ class MinHashSpec extends SparkSpec {
       .filter(size(col("ids")) > 0)
     val both = docs.select(
       Dedup.minHash(col("ids"), 64).as("native"),
-      Dedup.minHashHofLong(col("ids"), 64).as("hof"))
+      HofForms.minHashHofLong(col("ids"), 64).as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() == 0)
     assert(both.count() == 200)
   }
@@ -62,7 +62,7 @@ class MinHashSpec extends SparkSpec {
     ).toDF("toks")
     val both = df.select(
       Dedup.minHash(col("toks"), 16).as("native"),
-      Dedup.minHashHof(col("toks"), 16).as("hof"))
+      HofForms.minHashHof(col("toks"), 16).as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() == 0)
     assert(both.filter(col("native").isNull).count() == 0)
   }
@@ -97,13 +97,13 @@ class MinHashSpec extends SparkSpec {
     val docs = graft.sources.Tables.load(spark, sf, "documents").limit(200)
     val both = docs.select(
       graft.llm.TextAnalysis.winnowingFingerprints(col("text"), 5, 4).as("native"),
-      graft.llm.TextAnalysis.winnowingFingerprintsHof(col("text"), 5, 4).as("hof"))
+      HofForms.winnowingFingerprintsHof(col("text"), 5, 4).as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() == 0)
     // degenerate shapes: shorter than k, exactly k, shorter than window
     val edge = Seq("one two", "a b c d e", "a b c d e f").toDF("text")
     val e = edge.select(
       graft.llm.TextAnalysis.winnowingFingerprints(col("text"), 5, 4).as("native"),
-      graft.llm.TextAnalysis.winnowingFingerprintsHof(col("text"), 5, 4).as("hof"))
+      HofForms.winnowingFingerprintsHof(col("text"), 5, 4).as("hof"))
     assert(e.filter(col("native") =!= col("hof")).count() == 0)
   }
 
@@ -112,13 +112,13 @@ class MinHashSpec extends SparkSpec {
       .select(Dedup.tokens(col("text")).as("toks"))
     val both = docs.select(
       Dedup.tokenIds64(col("toks")).as("native"),
-      Dedup.tokenIds64Hof(col("toks")).as("hof"))
+      HofForms.tokenIds64Hof(col("toks")).as("hof"))
     assert(both.filter(!(col("native") <=> col("hof"))).count() == 0)
     // null tokens map to null ids on both forms
     import spark.implicits._
     val withNull = Seq(Tuple1(Seq("a", null, "b"))).toDF("toks")
     val r = withNull.select(Dedup.tokenIds64(col("toks")).as("native"),
-      Dedup.tokenIds64Hof(col("toks")).as("hof")).head()
+      HofForms.tokenIds64Hof(col("toks")).as("hof")).head()
     assert(r.getSeq[Any](0) == r.getSeq[Any](1))
     assert(r.getSeq[Any](0)(1) == null)
   }
@@ -129,7 +129,7 @@ class MinHashSpec extends SparkSpec {
       .filter(size(col("toks")) > 0)
     val both = docs.select(
       Dedup.simHashBits(col("toks")).as("native"),
-      Dedup.simHashBitsHof(col("toks")).as("hof"))
+      HofForms.simHashBitsHof(col("toks")).as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() == 0)
     assert(both.count() == 200)
   }
@@ -175,7 +175,7 @@ class MinHashSpec extends SparkSpec {
       val sigs = docs.select(Dedup.minHash(col("toks"), 64).as("mh"))
       val both = sigs.select(
         MinHash.bandHashes(col("mh"), bands).as("native"),
-        Dedup.bandHashesHof(col("mh"), 64, bands).as("hof"))
+        HofForms.bandHashesHof(col("mh"), 64, bands).as("hof"))
       assert(both.filter(col("native") =!= col("hof")).count() == 0,
         s"bands=$bands long basis")
     }

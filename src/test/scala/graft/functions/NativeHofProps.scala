@@ -30,7 +30,7 @@ object NativeHofProps extends Properties("NativeVsHof") {
     val df = docs.toDF("toks")
     df.select(
       Dedup.minHash(col("toks"), 16).as("n"),
-      Dedup.minHashHof(col("toks"), 16).as("h"))
+      HofForms.minHashHof(col("toks"), 16).as("h"))
       .filter(col("n") =!= col("h")).count() == 0
   }
 
@@ -38,7 +38,7 @@ object NativeHofProps extends Properties("NativeVsHof") {
     val df = docs.toDF("toks")
     df.select(
       Dedup.simHashBits(col("toks")).as("n"),
-      Dedup.simHashBitsHof(col("toks")).as("h"))
+      HofForms.simHashBitsHof(col("toks")).as("h"))
       .filter(col("n") =!= col("h")).count() == 0
   }
 
@@ -46,7 +46,7 @@ object NativeHofProps extends Properties("NativeVsHof") {
     val df = docs.map(_.mkString(" ")).toDF("text")
     df.select(
       TextAnalysis.winnowingFingerprints(col("text"), 3, 4).as("n"),
-      TextAnalysis.winnowingFingerprintsHof(col("text"), 3, 4).as("h"))
+      HofForms.winnowingFingerprintsHof(col("text"), 3, 4).as("h"))
       .filter(col("n") =!= col("h")).count() == 0
   }
 
@@ -83,7 +83,7 @@ object NativeHofProps extends Properties("NativeVsHof") {
     val df = pairs.toDF("a", "b")
     df.select(
       Dedup.minHashSimilarity(col("a"), col("b"), k).as("n"),
-      Dedup.minHashSimilarityHof(col("a"), col("b"), k).as("h"))
+      HofForms.minHashSimilarityHof(col("a"), col("b"), k).as("h"))
       .filter(col("n") =!= col("h")).count() == 0
   }
 

@@ -15,7 +15,7 @@ class NativeSpec extends SparkSpec {
       .filter(col("a_id") < col("b_id"))
     val diff = pairs.select(
       Native.cosineSimilarity(col("a"), col("b")).as("native"),
-      Similarity.cosineHof(col("a"), col("b")).as("hof"))
+      HofForms.cosineHof(col("a"), col("b")).as("hof"))
       .filter(col("native") =!= col("hof")) // bit-exact: same fold order
       .count()
     assert(diff == 0)

@@ -60,12 +60,12 @@ class TextStatsSpec extends SparkSpec {
 
   test("native gopher flags equal the HOF battery (fixtures + corpus)") {
     pinEqual(TextAnalysis.gopherQualityFlags(col("text")),
-      TextAnalysis.gopherQualityFlagsHof(col("text")), "gopher_text_flags")
+      HofForms.gopherQualityFlagsHof(col("text")), "gopher_text_flags")
   }
 
   test("native c4 line cleaning equals the HOF battery (fixtures + corpus)") {
     pinEqual(TextAnalysis.c4CleanLines(col("text")),
-      TextAnalysis.c4CleanLinesHof(col("text")), "c4_clean_lines")
+      HofForms.c4CleanLinesHof(col("text")), "c4_clean_lines")
   }
 
   test("native lines equal the HOF split+trim+filter (fixtures + corpus)") {

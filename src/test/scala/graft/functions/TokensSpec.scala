@@ -37,7 +37,7 @@ class TokensSpec extends SparkSpec {
   test("native tokens_ws equals the HOF split+filter form on every fixture") {
     val bad = df.select(
         graft.llm.Dedup.tokens(col("text")).as("a"),
-        graft.llm.Dedup.tokensHof(col("text")).as("b"))
+        HofForms.tokensHof(col("text")).as("b"))
       .filter(not(col("a") <=> col("b")))
       .count()
     assert(bad == 0, "tokens_ws drifted from the HOF form")
@@ -47,7 +47,7 @@ class TokensSpec extends SparkSpec {
     val docs = graft.sources.Tables.load(spark, sf01, "documents")
     val bad = docs.select(
         graft.llm.Dedup.tokens(col("text")).as("a"),
-        graft.llm.Dedup.tokensHof(col("text")).as("b"))
+        HofForms.tokensHof(col("text")).as("b"))
       .filter(not(col("a") <=> col("b")))
       .count()
     assert(bad == 0, "tokens_ws drifted from the HOF form on corpus text")

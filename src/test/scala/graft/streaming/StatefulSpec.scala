@@ -276,13 +276,16 @@ class StatefulSpec extends SparkSpec {
     // the TTL knob must be USABLE: passing a non-NONE TTL requires
     // TimeMode.ProcessingTime (a TTL under TimeMode.None throws at
     // stream start — the bug class this pin exists for); after the TTL
-    // lapses, a re-delivered key is first-seen again
+    // lapses, a re-delivered key is first-seen again. Processing-time TTL
+    // runs from the first batch's START, so the TTL must outlast that
+    // batch plus the next one's start: a cold first batch (classloading,
+    // codegen, RocksDB open) took 4.9 s on a loaded 4-core machine
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     withRocksDb {
       val stream = MemoryStream[(Long, String)]
       val out = Stateful.firstSeen[Long, (Long, String)](stream.toDS(), _._1,
         ttl = org.apache.spark.sql.streaming.TTLConfig(
-          java.time.Duration.ofSeconds(2))).toDF("id", "payload")
+          java.time.Duration.ofSeconds(10))).toDF("id", "payload")
       val got = java.util.concurrent.ConcurrentHashMap.newKeySet[(Long, String)]()
       val q = out.writeStream.outputMode("update")
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -293,7 +296,7 @@ class StatefulSpec extends SparkSpec {
         stream.addData((1L, "a"))
         pollUntil(got.contains((1L, "a")), "the first delivery of key 1")
         stream.addData((1L, "b")) // within TTL — suppressed as a dup
-        Thread.sleep(4500) // let the 2s value TTL lapse
+        Thread.sleep(12500) // let the 10s value TTL lapse
         stream.addData((1L, "c")) // state evicted — first-seen again
         pollUntil(got.contains((1L, "c")), "the post-eviction re-delivery")
       } finally q.stop()
