@@ -1,8 +1,11 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, Row}
+import graft.core.{Signal, SignalBus, StageId}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Bounded-bucket primitives shared by every banded self-join axis
   * (perceptual media, text MinHash/SimHash, hyperplane embedding tables,
@@ -245,8 +248,83 @@ private[graft] object BucketCap {
       .observe(observeName,
         sum(when(col("_arrival") > cap, 1L).otherwise(0L) + col("_bcap_pd"))
           .as("dropped_rows"),
-        max(lit(cap)).as("cap"))
+        max(lit(cap)).as("max_bucket_size"))
       .filter(col("_arrival") <= cap)
       .drop("_arrival", "_bcap_pd")
   }
+
+  /** The bucket cut every banded join calls: `Int.MaxValue` returns `df`
+    * (uncapped = exact); any other `maxBucketSize` runs [[capByRank]] and
+    * fires `signal` from `stage` whenever it dropped rows. Spec-pinned per
+    * axis: capped pairs ⊆ uncapped, and a cap at or above the largest
+    * bucket is exact.
+    */
+  def cut(df: DataFrame, bucketCols: Seq[String], orderCols: Seq[String],
+          maxBucketSize: Int, signal: String, stage: String,
+          maxTrackedBytes: Long = 64L << 20): DataFrame =
+    if (maxBucketSize == Int.MaxValue) df
+    else {
+      require(maxBucketSize >= 1, s"maxBucketSize must be >= 1, got $maxBucketSize")
+      capByRank(df, bucketCols, orderCols, maxBucketSize,
+        cutName(df.sparkSession, signal, stage), maxTrackedBytes)
+    }
+
+  private val CutPrefix = "graft.cut"
+  private val cutSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A fresh observe-node name for a cut that reports as `signal` from
+    * `stage`, with the bridge registered on `spark`. The per-call
+    * sequence number keeps names unique: Spark rejects two observed
+    * metrics of one name in a query unless the nodes are identical.
+    */
+  def cutName(spark: SparkSession, signal: String, stage: String): String = {
+    require(!signal.contains(':') && !stage.contains(':'),
+      s"cut signal and stage must not contain ':': $signal, $stage")
+    bridge(spark)
+    s"$CutPrefix:$signal:$stage:${cutSeq.incrementAndGet()}"
+  }
+
+  // weak keys: sessions come and go in long-lived drivers (newSession per
+  // job/tenant); a strong set would pin every stopped session AND its
+  // registered listener for the life of the JVM
+  private val bridged = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(
+      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
+
+  /** Sessions carrying the cut bridge — the listener-hygiene audit hook:
+    * repeated cuts on one session must register exactly one.
+    */
+  def bridgedCount: Int = bridged.size()
+
+  /** Forward every [[cutName]]-named observed metric to
+    * [[graft.core.SignalBus.global]] plus a WARN log, once per session.
+    * The metric rides the cut's own plan as a `CollectMetrics` node — no
+    * extra job, no extra shuffle — so the approximation a cut introduces
+    * is observable at zero plan cost. A signal fires only when the first
+    * observed column (the dropped count) is above 0; its fields are the
+    * observed columns under their own names.
+    */
+  private def bridge(spark: SparkSession): Unit =
+    if (bridged.add(spark)) {
+      spark.listenerManager.register(new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution,
+                               durationNs: Long): Unit =
+          qe.observedMetrics.foreach { case (name, row) =>
+            name.split(':') match {
+              case Array(CutPrefix, signal, stage, _)
+                  if !row.isNullAt(0) && row.getLong(0) > 0L =>
+                val fields = row.schema.fieldNames.toSeq.zipWithIndex
+                  .map { case (f, i) => f -> String.valueOf(row.get(i)) }
+                SignalBus.global.emit(Signal(signal, StageId(stage), fields.toMap))
+                org.slf4j.LoggerFactory.getLogger(BucketCap.getClass).warn(
+                  s"$signal in $stage: " +
+                    fields.map { case (f, v) => s"$f=$v" }.mkString(", ") +
+                    " — results past the cut are approximate")
+              case _ =>
+            }
+          }
+        override def onFailure(funcName: String, qe: QueryExecution,
+                               error: Exception): Unit = ()
+      })
+    }
 }

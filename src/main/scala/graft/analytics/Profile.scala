@@ -52,6 +52,15 @@ object Profile {
     * from the column NAME — a column named `a.b` or `max price` must not
     * break alias parsing (the public `col_name` output keeps the real
     * name as a literal, which needs no quoting).
+    *
+    * The exact form (`approxDistinct = false`) EXECUTES `df` k+1 times
+    * for k columns: once for the base aggregate and once per column's
+    * distinct count. Over a file scan that is k+1 pruned scans; over a
+    * computed input the whole upstream chain runs k+1 times, and over a
+    * nondeterministic input (`sample`, `rand`-derived columns) the
+    * distinct counts see different rows than count/nulls/min/max. Persist
+    * such an input before profiling it, or use `approxDistinct = true`
+    * (one pass).
     */
   def profile(df: DataFrame, cols: Seq[String],
               approxDistinct: Boolean = false,

@@ -10,9 +10,12 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused PII scrub: the staged URL → email → IPv4 → phone battery
-  * (`TextAnalysis.redactPii` + the three per-class counters) evaluated
-  * as ONE expression with one `java.util.regex` traversal per class —
-  * count and replace happen in the SAME `Matcher` walk.
+  * (four `regexp_replace` passes + the three per-class counters)
+  * evaluated as ONE expression with one `java.util.regex` traversal per
+  * class — count and replace happen in the SAME `Matcher` walk. It is
+  * the engine's one redaction path: `TextAnalysis.redactPii` is its
+  * `redacted` field, so the pretrain pipeline, the crawl state and ql46
+  * all scrub through it.
   *
   * Why it exists: the relational form needs seven traversals per row
   * (URL replace, then count+replace per remaining class — even with
@@ -21,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * string). This is the GopherGramStats argument applied to the regex
   * battery: a per-row hot path measured at seconds per bench run
   * deserves a fused implementation. Bit-exactness vs the staged column
-  * form is spec-pinned (`LlmSpec`) — both use identical Java patterns,
+  * form is spec-pinned (`RepetitionSpec`) — both use identical Java patterns,
   * identical match-iteration order, and literal replacements, so counts
   * and the redacted text agree byte for byte (and the DuckDB oracle's
   * staged RE2 replay is unchanged).

@@ -125,7 +125,7 @@ object Dedup {
 
   /** Candidate pairs over an existing [[BandIndex]] table — the same
     * band self-join + fused scoring tail as [[minHashLshCandidates]],
-    * entered from persisted `(id, mh, band, bh)` rows instead of text
+    * entered from persisted `(id, mh, bha, band, bh)` rows instead of text
     * (so `minHashLshCandidates(docs) ==
     * minHashLshCandidatesFromIndex(BandIndex.build(docs))` by
     * construction — they share this code). The incremental-lifecycle
@@ -176,60 +176,60 @@ object Dedup {
       .select(col("id"), col("mh"), col("bha"), posexplode(col("bha")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
 
+  /** One side of a band join: fails loudly on a frame without `bha`
+    * (an index saved before it existed — see [[BandIndex.upgrade]]), then
+    * cuts saturated (band, bh) buckets to their first `maxBucketSize` ids
+    * ([[graft.analytics.BucketCap.cut]], firing `lsh.bucket_cut`). Mass-
+    * duplicated or near-empty documents collapse whole buckets onto one
+    * key and the self-join goes quadratic in them (`StreamStateBench`:
+    * a 100.2× pair blowup at 10×). The capped tail never reads `bha`, so
+    * it does not ride the cut window's Exchange.
+    */
+  private def bandSide(banded: DataFrame, maxBucketSize: Int,
+                       stage: String): DataFrame = {
+    require(banded.schema.fieldNames.contains("bha"),
+      s"$stage: banded frame has no `bha` band-hash column (an index saved " +
+        "before it existed) — convert it with Dedup.BandIndex.upgrade(index, bands)")
+    if (maxBucketSize == Int.MaxValue) banded
+    else graft.analytics.BucketCap.cut(banded.drop("bha"), Seq("band", "bh"),
+      Seq("id"), maxBucketSize, Signals.LshBucketCut, stage)
+  }
+
+  /** The one (band, bh) join of the banded family, sides aliased `a` and
+    * `b` for the caller's projection, `idPred` the pair orientation.
+    * A pair colliding in k bands exits the join k times. UNCAPPED, every
+    * agreeing band's collision row exists, so each row can decide
+    * locally whether ITS band is the pair's first agreeing band and only
+    * that one survives — one row per pair with no dropDuplicates Exchange
+    * and its two HashAggregates over every collision row (the measured
+    * majority of ql6 after the scan). The comparison is O(bands) over the
+    * CARRIED band-hash arrays ([[graft.functions.FirstEqualSlot]]) —
+    * round 21 re-hashed both full signatures per collision row, the
+    * measured ql53 regression. CAPPED, a cut bucket may have dropped the
+    * first agreeing band's row, so the caller keeps its
+    * `dropDuplicates` (equivalence spec-pinned uncapped in `MinHashSpec`).
+    */
+  private def bandJoin(a: DataFrame, b: DataFrame, uncapped: Boolean)(
+      idPred: (Column, Column) => Column): DataFrame = {
+    val joined = a.as("a").join(b.as("b"),
+      col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
+        idPred(col("a.id"), col("b.id")))
+    if (uncapped)
+      joined.filter(col("a.band") ===
+        graft.functions.MinHash.firstEqualSlot(col("a.bha"), col("b.bha")))
+    else joined
+  }
+
   /** Candidate-pair join over a banded-signature table: band-key
     * collisions scored inside the join (see [[minHashLshCandidates]] for
-    * the why), deduped to one `(doc_a, doc_b, est_jaccard)` row per pair.
+    * the why), one `(doc_a, doc_b, est_jaccard)` row per pair.
     */
-  /** Arrival-rank df-cut of saturated (band, bh) SIGNATURE buckets — the
-    * [[graft.sources.Multimodal]] perceptual `maxBucketSize` convention
-    * on the text axis, and the batch twin of the streaming
-    * [[graft.streaming.Stateful]] bucket caps (round 18): a corpus full
-    * of mass-duplicated or near-empty documents collapses whole band
-    * buckets onto one key, and the banded self-join goes quadratic in
-    * them (`StreamStateBench` measured a 100.2× pair blowup at 10× on
-    * exactly this construction). Keep each bucket's first
-    * `maxBucketSize` rows in id order, drop later arrivals; the rank
-    * window hash-partitions on (band, bh) — the SAME distribution the
-    * pair self-join needs — so the window's Exchange IS the join's
-    * (zero added shuffles, the Multimodal capBuckets argument). Cuts are
-    * observable via the `lsh.bucket_cut` signal, never silent.
-    * Contracts (spec-pinned): capped pairs ⊆ uncapped; a cap at or above
-    * the largest bucket returns the EXACT uncapped result.
-    *
-    * Round 19: the rank window runs over a MAP-SIDE PRE-CUT
-    * ([[graft.analytics.BucketCap.capByRank]] — VERDICT r18 #1): each
-    * input partition keeps only its own first-cap ids per (band, bh)
-    * BEFORE the Exchange, bounding the saturated bucket's reducer input
-    * at cap × numPartitions rows — byte-identical output and drop
-    * metric (`BucketCapSpec`).
-    */
-  private def capBandBuckets(banded: DataFrame, maxBucketSize: Int,
-                             stage: String): DataFrame =
-    if (maxBucketSize == Int.MaxValue) banded
-    else {
-      require(maxBucketSize >= 1, s"maxBucketSize must be >= 1, got $maxBucketSize")
-      bridgeDfCut(banded.sparkSession)
-      graft.analytics.BucketCap.capByRank(banded, Seq("band", "bh"), Seq("id"),
-        maxBucketSize, lshCutObserveName(stage))
-    }
-
   private def candidatePairsFromBands(banded0: DataFrame,
                                       numHashes: Int,
                                       maxBucketSize: Int = Int.MaxValue,
                                       bands: Int = 8): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    // the local first-band rule needs every agreeing band's collision row
-    // (uncapped) AND the banding's own band-hash arrays on the rows; a
-    // legacy persisted index without `bha` takes the dropDuplicates tail,
-    // which is banding-agnostic — so a wrong `bands` argument can no
-    // longer silently drop pairs (ADVICE r21 #1)
-    val localFirstBand =
-      maxBucketSize == Int.MaxValue && banded0.columns.contains("bha")
-    // the capped/legacy tail never reads `bha` — don't ship it through
-    // the cap window's Exchange
-    val banded = capBandBuckets(
-      if (localFirstBand) banded0 else dropIfPresent(banded0, "bha"),
-      maxBucketSize, "minHashLshCandidates")
+    val banded = bandSide(banded0, maxBucketSize, "minHashLshCandidates")
     // shuffle_hash, not the planner's default broadcast: both sides of
     // the self-join then want the SAME Exchange(hashpartitioning(band,
     // bh)) and AQE reuses it, so the signature chain (tokenize → ids →
@@ -239,41 +239,13 @@ object Dedup {
     // broadcast threshold anyway. No sort: SHJ hashes the narrow
     // (band, bh) key; signatures ride the exchange exactly once (the
     // BandIndex row format).
-    val a = banded.hint("shuffle_hash").as("a")
-    val b = banded.hint("shuffle_hash").as("b")
-    val joined = a.join(b,
-      col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-        col("a.id") < col("b.id"))
-    // A pair colliding in k bands exits the join k times as IDENTICAL
-    // rows. UNCAPPED, every agreeing band's collision row exists, so each
-    // row can decide locally whether ITS band is the pair's first
-    // agreeing band and only that one survive — the same one-row-per-pair
-    // result as the old dropDuplicates, minus its Exchange + two
-    // HashAggregates over every collision row (the measured majority of
-    // ql6 after the scan; guide §2.4 "remove shuffles outright"). The
-    // comparison is O(bands) over the CARRIED band-hash arrays
-    // ([[graft.functions.FirstEqualSlot]]) — round 21 re-hashed both full
-    // signatures per collision row (up to 2×numHashes XXH64 calls), the
-    // measured ql53 regression. CAPPED, a cut bucket may have dropped the
-    // first-agreeing band's row, so the local rule could discard a pair
-    // the join still found — keep the dedup there (equivalence
-    // spec-pinned uncapped in `MinHashSpec`).
-    if (localFirstBand)
-      joined
-        .filter(col("a.band") ===
-          graft.functions.MinHash.firstEqualSlot(col("a.bha"), col("b.bha")))
-        .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
-          minHashSimilarity(col("a.mh"), col("b.mh"), numHashes).as("est_jaccard"))
-    else
-      joined
-        .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
-          minHashSimilarity(col("a.mh"), col("b.mh"), numHashes).as("est_jaccard"))
-        .dropDuplicates("doc_a", "doc_b")
+    val uncapped = maxBucketSize == Int.MaxValue
+    val pairs = bandJoin(banded.hint("shuffle_hash"), banded.hint("shuffle_hash"),
+        uncapped)(_ < _)
+      .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
+        minHashSimilarity(col("a.mh"), col("b.mh"), numHashes).as("est_jaccard"))
+    if (uncapped) pairs else pairs.dropDuplicates("doc_a", "doc_b")
   }
-
-  /** `drop` that tolerates the column's absence (legacy banded frames). */
-  private def dropIfPresent(df: DataFrame, c: String): DataFrame =
-    if (df.columns.contains(c)) df.drop(c) else df
 
   /** Persistable LSH band index — the INCREMENTAL entry to the near-dup
     * pipeline. A 100 TB corpus is not re-signed on every ingest: build the
@@ -293,8 +265,8 @@ object Dedup {
     * batch-side Exchange (`BucketingSpec`).
     */
   object BandIndex {
-    /** `(id, mh, band, bh)` rows for a corpus (same parameters MUST be
-      * used for every increment — signatures from different
+    /** `(id, mh, bha, band, bh)` rows for a corpus (same parameters
+      * MUST be used for every increment — signatures from different
       * numHashes/bands never collide correctly).
       */
     def build(df: DataFrame, idCol: String, textCol: String,
@@ -309,6 +281,28 @@ object Dedup {
       index.write.mode("overwrite").parquet(path)
     def load(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
       spark.read.parquet(path)
+
+    /** The one conversion from an index saved before band-hash arrays
+      * existed — `(id, mh, band, bh)` rows — to the current format: adds
+      * `bha` from the stored signature (`bands` = the banding it was
+      * built with); an index that already carries `bha` is returned as
+      * is. A pure projection, so a bucketed index keeps its (band, bh)
+      * distribution and its band joins stay index-Exchange-free. A wrong
+      * `bands` would make the first-band rule drop pairs silently, so
+      * each row checks that its own `bh` sits at slot `band` of the new
+      * array and the query fails otherwise.
+      */
+    def upgrade(index: DataFrame, bands: Int): DataFrame =
+      if (index.schema.fieldNames.contains("bha")) index
+      else {
+        val bha = graft.functions.MinHash.bandHashes(col("mh"), bands)
+        index.select(col("id"), col("mh"),
+          when(try_element_at(bha, col("band") + 1) === col("bh"), bha)
+            .otherwise(raise_error(lit(s"BandIndex.upgrade: bands = $bands " +
+              "does not match the banding the index was built with")))
+            .as("bha"),
+          col("band"), col("bh"))
+      }
 
     /** Bucketed persistence — the fleet-scale layout the class doc
       * promises: the index written bucketed AND sorted on the
@@ -391,47 +385,24 @@ object Dedup {
     // from-scratch batch run holds at the default (uncapped) setting
     // ONLY: capped, the index keeps its first-cap ids per bucket while
     // a union run would rank old and new ids together.
-    // the local first-band rule (candidatePairsFromBands) applies here
-    // too when uncapped and BOTH frames carry their band-hash arrays: a
-    // cross/intra pair's collision rows exist for every agreeing band,
-    // so `a.band === first_equal_slot(a.bha, b.bha)` keeps exactly one —
-    // and cross (one old id) and intra (both new) are disjoint pair
-    // sets, so with both deduped locally the union needs NO
-    // dropDuplicates Exchange at all. A legacy index without `bha`
-    // keeps the dedup tail (banding-agnostic — ADVICE r21 #1).
-    val localFirstBand = maxBucketSize == Int.MaxValue &&
-      newIndex.columns.contains("bha") && index.columns.contains("bha")
-    val nb = capBandBuckets(
-      if (localFirstBand) newIndex else dropIfPresent(newIndex, "bha"),
-      maxBucketSize, "minHashLshCandidatesAgainst")
-    val a = nb.as("a")
-    val b = capBandBuckets(
-      if (localFirstBand) index else dropIfPresent(index, "bha"),
-      maxBucketSize, "minHashLshCandidatesAgainst").as("b")
+    // Uncapped, the local first-band rule (bandJoin) keeps exactly one
+    // row per cross or intra pair, and cross (one old id) and intra
+    // (both new) are disjoint pair sets, so the union needs NO
+    // dropDuplicates Exchange at all.
+    val uncapped = maxBucketSize == Int.MaxValue
+    val nb = bandSide(newIndex, maxBucketSize, "minHashLshCandidatesAgainst")
+    val old = bandSide(index, maxBucketSize, "minHashLshCandidatesAgainst")
     // least/greatest = the batch form's a.id < b.id orientation, reachable
     // from either side of the cross join
-    val crossJoined = a.join(b, col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-        col("a.id") =!= col("b.id"))
-    val cross = (if (localFirstBand)
-        crossJoined.filter(col("a.band") ===
-          graft.functions.MinHash.firstEqualSlot(col("a.bha"), col("b.bha")))
-      else crossJoined)
+    val cross = bandJoin(nb, old, uncapped)(_ =!= _)
       .select(least(col("a.id"), col("b.id")).as("doc_a"),
         greatest(col("a.id"), col("b.id")).as("doc_b"),
         minHashSimilarity(col("a.mh"), col("b.mh"), numHashes).as("est_jaccard"))
-    val x = nb.as("x")
-    val y = nb.as("y")
-    val intraJoined = x.join(y, col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-        col("x.id") < col("y.id"))
-    val intra = (if (localFirstBand)
-        intraJoined.filter(col("x.band") ===
-          graft.functions.MinHash.firstEqualSlot(col("x.bha"), col("y.bha")))
-      else intraJoined)
-      .select(col("x.id").as("doc_a"), col("y.id").as("doc_b"),
-        minHashSimilarity(col("x.mh"), col("y.mh"), numHashes).as("est_jaccard"))
+    val intra = bandJoin(nb, nb, uncapped)(_ < _)
+      .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
+        minHashSimilarity(col("a.mh"), col("b.mh"), numHashes).as("est_jaccard"))
     val unioned = if (withinNew) cross.union(intra) else cross
-    val scored =
-      if (localFirstBand) unioned else unioned.dropDuplicates("doc_a", "doc_b")
+    val scored = if (uncapped) unioned else unioned.dropDuplicates("doc_a", "doc_b")
     if (minJaccard > 0) scored.filter(col("est_jaccard") >= minJaccard) else scored
   }
 
@@ -484,37 +455,20 @@ object Dedup {
       .withColumn("bits", simHashBits(col("toks")))
     // fused banding over the bit vector (one loop — the hashInt chain of
     // xxhash64 over ARRAY<INT> slices, bit-equality spec-pinned) + the
-    // carried band-hash array for the uncapped local pair dedup below
-    // (the candidatePairsFromBands design, round 22)
-    val uncapped = maxBucketSize == Int.MaxValue
-    val withBha = withBits
+    // carried band-hash array for the uncapped local pair dedup (bandJoin)
+    val banded = bandSide(withBits
       .withColumn("bha", graft.functions.MinHash.bandHashes(col("bits"), b0))
-    val exploded = withBha
-      .select(col("id") +: (if (uncapped) Seq(col("bha")) else Nil) :+
-        posexplode(col("bha")): _*)
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
-    val banded = capBandBuckets(exploded, maxBucketSize, "simHashCandidates")
+      .select(col("id"), col("bha"), posexplode(col("bha")))
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh"),
+      maxBucketSize, "simHashCandidates")
     // shuffle_hash → one reused Exchange for both sides: the simhash
     // bit-vote chain computes once, not once per side (see
     // candidatePairsFromBands)
-    val a = banded.hint("shuffle_hash").as("a")
-    val b = banded.hint("shuffle_hash").as("b")
-    val joined = a.join(b,
-      col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-        col("a.id") < col("b.id"))
-    // uncapped: one collision row per pair survives LOCALLY (first
-    // agreeing band — every agreeing band's row exists), removing the
-    // dropDuplicates Exchange + HashAggregates over the collision rows;
-    // capped buckets keep the dedup (candidatePairsFromBands argument)
-    if (uncapped)
-      joined
-        .filter(col("a.band") ===
-          graft.functions.MinHash.firstEqualSlot(col("a.bha"), col("b.bha")))
-        .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
-    else
-      joined
-        .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
-        .dropDuplicates("doc_a", "doc_b")
+    val uncapped = maxBucketSize == Int.MaxValue
+    val pairs = bandJoin(banded.hint("shuffle_hash"), banded.hint("shuffle_hash"),
+        uncapped)(_ < _)
+      .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
+    if (uncapped) pairs else pairs.dropDuplicates("doc_a", "doc_b")
   }
 
   /** SimHash `bands` sized for the corpus (the [[Similarity.autoPlanes]]
@@ -641,102 +595,6 @@ object Dedup {
     */
   val DefaultMaxShingleDocFreq = 10000L
 
-  /** Observed-metric name prefix for the df-cut (suffix = a per-call
-    * sequence number — Spark rejects duplicate observed-metric names in
-    * one query).
-    */
-  private[graft] val DfCutMetric = "graft.jaccard.df_cut"
-  private val dfCutSeq = new java.util.concurrent.atomic.AtomicLong()
-  /** Observed-metric prefix for the batch LSH band-bucket cut
-    * ([[capBandBuckets]]) — forwarded by the same once-per-session
-    * bridge listener as the jaccard df-cut.
-    */
-  private[graft] val LshBucketCutMetric = "graft.lsh.bucket_cut"
-  private val lshBucketCutSeq = new java.util.concurrent.atomic.AtomicLong()
-  /** Fresh observe-node name for an LSH-family bucket cut — shared with
-    * other modules' band joins (the hyperplane tables and IVF cells in
-    * [[graft.llm.Similarity]]) so every cut forwards through ONE bridge.
-    * `stage` (no dots) rides the name — the bridge parses it back so the
-    * signal attributes the cut to the operator that fired it (ADVICE
-    * r18: a hardcoded label misattributed embedding-axis cuts).
-    */
-  private[graft] def lshCutObserveName(stage: String): String = {
-    require(!stage.contains('.'), s"stage must not contain dots: $stage")
-    s"$LshBucketCutMetric.$stage.${lshBucketCutSeq.incrementAndGet()}"
-  }
-  /** Register the cut-forwarding listener for callers outside this file. */
-  private[graft] def bridgeCuts(spark: org.apache.spark.sql.SparkSession): Unit =
-    bridgeDfCut(spark)
-  // weak keys: sessions come and go in long-lived drivers (newSession per
-  // job/tenant); a strong set would pin every stopped session AND its
-  // registered listener for the life of the JVM
-  private val dfCutBridged = java.util.Collections.synchronizedSet(
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, java.lang.Boolean]()))
-
-  /** Sessions carrying a df-cut bridge — the listener-hygiene audit hook:
-    * repeated jaccard calls on one session must register exactly one.
-    */
-  private[graft] def dfCutBridgedCount: Int = dfCutBridged.size()
-
-  /** Bridge df-cut observed metrics → [[graft.core.SignalBus.global]] +
-    * a WARN log, once per session (idempotent). The metric rides the
-    * existing shingle-df aggregate as a `CollectMetrics` node — no extra
-    * job, no extra shuffle, counts computed during whatever action the
-    * caller runs — so the approximation the cut introduces is OBSERVABLE
-    * at exactly zero plan cost: a `jaccard.df_cut` signal fires only when
-    * shingles were actually dropped.
-    */
-  private def bridgeDfCut(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (dfCutBridged.add(spark)) {
-      spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-        private def forward(qe: org.apache.spark.sql.execution.QueryExecution): Unit =
-          qe.observedMetrics.foreach { case (name, row) =>
-            if (name.startsWith(DfCutMetric)) {
-              val dropped = if (row.isNullAt(0)) 0L else row.getLong(0)
-              if (dropped > 0L) {
-                val fields = Map(
-                  "dropped_shingles" -> dropped.toString,
-                  "dropped_occurrences" -> (if (row.isNullAt(1)) "0" else row.getLong(1).toString),
-                  "max_shingle_doc_freq" -> (if (row.isNullAt(2)) "?" else row.getLong(2).toString))
-                SignalBus.global.emit(Signal(Signals.JaccardDfCut,
-                  StageId("jaccardSimilarityJoin"), fields))
-                org.slf4j.LoggerFactory.getLogger(Dedup.getClass).warn(
-                  s"jaccardSimilarityJoin df-cut dropped ${fields("dropped_shingles")} hot " +
-                    s"shingles (${fields("dropped_occurrences")} occurrences, cap " +
-                    s"${fields("max_shingle_doc_freq")}): similarities are approximate")
-              }
-            } else if (name.startsWith(LshBucketCutMetric)) {
-              val dropped = if (row.isNullAt(0)) 0L else row.getLong(0)
-              if (dropped > 0L) {
-                // name = <prefix>.<stage>.<seq> — parse the originating
-                // stage back out so embedding-axis cuts (hyperplane
-                // tables, IVF cells) attribute correctly (ADVICE r18)
-                val rest = name.drop(LshBucketCutMetric.length + 1)
-                val stage = rest.lastIndexOf('.') match {
-                  case -1 => "minHashLshCandidates"
-                  case i  => rest.substring(0, i)
-                }
-                val fields = Map(
-                  "dropped_rows" -> dropped.toString,
-                  "max_bucket_size" -> (if (row.isNullAt(1)) "?" else row.getInt(1).toString))
-                SignalBus.global.emit(Signal(Signals.LshBucketCut,
-                  StageId(stage), fields))
-                org.slf4j.LoggerFactory.getLogger(Dedup.getClass).warn(
-                  s"lsh bucket cut in $stage dropped ${fields("dropped_rows")} banded rows " +
-                    s"past cap ${fields("max_bucket_size")}: saturated buckets have partial recall")
-              }
-            }
-          }
-        override def onSuccess(funcName: String,
-                               qe: org.apache.spark.sql.execution.QueryExecution,
-                               durationNs: Long): Unit = forward(qe)
-        override def onFailure(funcName: String,
-                               qe: org.apache.spark.sql.execution.QueryExecution,
-                               error: Exception): Unit = ()
-      })
-    }
-
   def jaccardSimilarityJoin(df: DataFrame, idCol: String, textCol: String,
                             n: Int = 2, threshold: Double = 0.5,
                             maxShingleDocFreq: Option[Long] = Some(DefaultMaxShingleDocFreq)): DataFrame = {
@@ -748,12 +606,12 @@ object Dedup {
         // The cut is observable (advice: no silent approximation): dropped
         // shingle / occurrence counts ride the agg as observed metrics and
         // surface as a `jaccard.df_cut` signal when nonzero.
-        bridgeDfCut(df.sparkSession)
         val dfs = sh0.groupBy(col("g")).agg(count(lit(1)).as("_df"))
-          .observe(s"$DfCutMetric.${dfCutSeq.incrementAndGet()}",
+          .observe(graft.analytics.BucketCap.cutName(df.sparkSession,
+              Signals.JaccardDfCut, "jaccardSimilarityJoin"),
             sum(when(col("_df") > cap, 1L).otherwise(0L)).as("dropped_shingles"),
             sum(when(col("_df") > cap, col("_df")).otherwise(0L)).as("dropped_occurrences"),
-            max(lit(cap)).as("cap"))
+            max(lit(cap)).as("max_shingle_doc_freq"))
         val rare = dfs.filter(col("_df") <= cap).select("g")
         sh0.join(rare, Seq("g"), "left_semi")
       case None => sh0

@@ -26,7 +26,8 @@ object Pipelines {
     *     line/paragraph stats back. Survivors then optionally pass the
     *     C4 line rules (`c4CleanLines` — off for corpora that are not
     *     sentence-shaped).
-    *  3. `redactPii` on survivors (URLs → emails → IPv4 → phones).
+    *  3. `redactPii` on survivors (URLs → emails → IPv4 → phones, the
+    *     fused `PiiScrub` expression).
     *  4. Fuzzy dedup: `minHashLshCandidates` at `minJaccard`, clusters
     *     resolved by pointer jumping, one survivor per cluster by
     *     highest `qualityScore` (ties → min id).
@@ -105,10 +106,10 @@ object Pipelines {
     // them repeatedly — the LSH banding side, keep-best's THREE survivor
     // joins, the bucket window, and (incrementally) the lm/nb trainers —
     // and each uncached read re-ran the repetition semi-join + the C4
-    // line battery + four redactPii regex passes + the quality score on
-    // top of the gate cache (the tools/Probe-measured majority of the
-    // pipeline's final pass). Survivor-sized like the gate cut,
-    // MEMORY_AND_DISK so a large survivor set spills instead of OOMing.
+    // line battery + the PII scrub + the quality score on top of the
+    // gate cache (the tools/Probe-measured majority of the pipeline's
+    // final pass). Survivor-sized like the gate cut, MEMORY_AND_DISK so
+    // a large survivor set spills instead of OOMing.
     val scrubbed = lined
       .withColumn(textCol, TextAnalysis.redactPii(col(textCol)))
       .withColumn("score", TextAnalysis.qualityScore(col(textCol)))
@@ -141,9 +142,9 @@ object Pipelines {
                      maxBucketSize: Int = Int.MaxValue): DataFrame = {
     val (scrubbed, gateCaches) = stageDocs(docs, idCol, textCol, useC4Lines)
 
-    // 4. fuzzy dedup, keep the best-scored copy (maxBucketSize df-cuts
+    // 4. fuzzy dedup, keep the best-scored copy (maxBucketSize cuts
     // saturated signature buckets — mass-duplicated crawl boilerplate —
-    // the Dedup.capBandBuckets contract; default uncapped = exact)
+    // and fires lsh.bucket_cut; default uncapped = exact)
     val pairs = Dedup.minHashLshCandidates(scrubbed, idCol, textCol,
       minJaccard = minJaccard, hashedTokenIds = hashedTokenIds,
       maxBucketSize = maxBucketSize)
@@ -152,12 +153,14 @@ object Pipelines {
     // 5. per-language buckets
     val result = bucketStage(deduped, idCol, textCol, langCol, dropTail)
     // `materialize` (default): compute the survivors eagerly
-    // (localCheckpoint) and RELEASE the hidden intermediate cache —
+    // (localCheckpoint) and RELEASE the two hidden intermediate caches —
     // disk-resident persisted blocks are NOT LRU-evicted, so a lazy
-    // return would leak one survivor-set copy per call for the life of
+    // return would leak two survivor-set copies per call for the life of
     // the app. Pass materialize = false to keep the pipeline lazy and
-    // own the `qualityOk` cache lifecycle yourself (the 100 TB calling
-    // convention: write the result to parquet, then clear the cache).
+    // own both caches yourself: the page-gate survivors (`qualityOk`)
+    // and the scrubbed, scored staged rows (`scrubbed`) stay persisted
+    // until the caller clears them — the 100 TB calling convention is to
+    // write the result to parquet, then `spark.catalog.clearCache()`.
     if (materialize) {
       val out = result.localCheckpoint(true)
       gateCaches.foreach(_.unpersist(blocking = false))
@@ -251,7 +254,7 @@ object Pipelines {
       cut.staged.write.mode("overwrite").parquet(s"$path/staged")
       indexTable match {
         case Some(tbl) => Dedup.BandIndex.saveBucketed(cut.index, tbl, s"$path/index")
-        case None      => cut.index.write.mode("overwrite").parquet(s"$path/index")
+        case None      => Dedup.BandIndex.save(cut.index, s"$path/index")
       }
       cut.pairs.write.mode("overwrite").parquet(s"$path/pairs")
       cut.langModel.write.mode("overwrite").parquet(s"$path/lang_model")
@@ -299,6 +302,9 @@ object Pipelines {
       * params come from the meta frame, the index reads bucketed (via
       * the catalog table recorded at save time) or plain, and
       * `gateCaches` starts empty — parquet frames have nothing pinned.
+      * An index saved before band-hash arrays existed is converted on
+      * load ([[Dedup.BandIndex.upgrade]] at the state's `bands`), so a
+      * state of any release appends under the one index format.
       */
     def load(spark: org.apache.spark.sql.SparkSession, path: String): CrawlState = {
       val meta = spark.read.parquet(s"$path/meta").head()
@@ -323,9 +329,10 @@ object Pipelines {
       // app restarts, not just same-session (ADVICE r15)
       val index = Option(meta.getAs[String]("index_table")) match {
         case Some(tbl) => Dedup.BandIndex.loadBucketed(spark, tbl, s"$path/index")
-        case None      => spark.read.parquet(s"$path/index")
+        case None      => Dedup.BandIndex.load(spark, s"$path/index")
       }
-      CrawlState(params, spark.read.parquet(s"$path/staged"), index,
+      CrawlState(params, spark.read.parquet(s"$path/staged"),
+        Dedup.BandIndex.upgrade(index, params.bands),
         spark.read.parquet(s"$path/pairs"),
         spark.read.parquet(s"$path/lang_model"),
         spark.read.parquet(s"$path/nb_model"))

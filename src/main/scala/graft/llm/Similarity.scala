@@ -631,9 +631,18 @@ object Similarity {
     require(tables >= 1, s"tables must be >= 1, got $tables")
     val base = df.select(col(idCol).as("id"), col("embedding"))
     val perTable = (0 until tables).map { tbl =>
-      val sig = capTableBuckets(base.withColumn("bucket",
-        hyperplaneSignature(col("embedding"), planes, dim, planeOffset = tbl * planes)),
-        maxBucketSize, "cosineNearDupPairs")
+      // maxBucketSize: identical vectors (failed-encode zeros, default
+      // embeddings, exact re-encodes) collide in EVERY table at ANY
+      // planes, so occupancy math cannot bound their bucket and the
+      // self-join goes quadratic in it — keep each bucket's first ids.
+      // These rows carry the FULL embedding vector (several KB to tens
+      // of KB at dim 768-4096), so the cut's map-side buffer gets a
+      // tight byte budget — the sampled-width flush makes it a hard
+      // bound, not a row-count guess (ADVICE r19)
+      val sig = graft.analytics.BucketCap.cut(base.withColumn("bucket",
+          hyperplaneSignature(col("embedding"), planes, dim, planeOffset = tbl * planes)),
+        Seq("bucket"), Seq("id"), maxBucketSize, Signals.LshBucketCut,
+        "cosineNearDupPairs", maxTrackedBytes = 16L << 20)
       val a = sig.as("a")
       val b = sig.as("b")
       a.join(b, col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
@@ -645,36 +654,6 @@ object Similarity {
     // sim — the dedup is on the narrow projected rows only
     perTable.reduce(_.unionByName(_)).dropDuplicates("doc_a", "doc_b")
   }
-
-  /** Arrival-rank df-cut of a saturated hyperplane bucket — the
-    * [[graft.llm.Dedup]] `capBandBuckets` convention on the EMBEDDING
-    * axis (round 18): identical vectors (failed-encode zeros, default
-    * embeddings, exact re-encodes of the same content) collide in EVERY
-    * table at ANY planes — the very property the ql32 recall oracle pins
-    * — so the occupancy math that keeps organic buckets ≈ targetBucket
-    * cannot bound them, and each table's self-join goes quadratic in the
-    * identical set. Keep each bucket's first `maxBucketSize` ids, drop
-    * later arrivals; the rank window hash-partitions on `bucket` — the
-    * join's own key — so capping adds ZERO shuffles. Cuts forward
-    * through the shared `lsh.bucket_cut` bridge, never silent.
-    */
-  private def capTableBuckets(sig: DataFrame, maxBucketSize: Int,
-                              stage: String): DataFrame =
-    if (maxBucketSize == Int.MaxValue) sig
-    else {
-      require(maxBucketSize >= 1, s"maxBucketSize must be >= 1, got $maxBucketSize")
-      graft.llm.Dedup.bridgeCuts(sig.sparkSession)
-      // round 19: map-side pre-cut before the rank window (VERDICT r18
-      // #1) — the saturated bucket's reducer input is bounded at
-      // cap x numPartitions, byte-identical output (BucketCapSpec).
-      // Round 20 (ADVICE r19): these rows carry the FULL embedding
-      // vector (several KB to tens of KB at dim 768-4096), so the
-      // map-side buffer gets a tight byte budget — the sampled-width
-      // flush turns it into a hard bound, not a row-count guess
-      graft.analytics.BucketCap.capByRank(sig, Seq("bucket"), Seq("id"),
-        maxBucketSize, graft.llm.Dedup.lshCutObserveName(stage),
-        maxTrackedBytes = 16L << 20)
-    }
 
   /** `planes` sized for the corpus: ceil(log2(n / targetBucket)), clamped
     * to [pMin, pMax]. Keeps expected bucket occupancy ≈ `targetBucket` as
@@ -1276,15 +1255,17 @@ object Similarity {
                       maxBucketSize: Int = Int.MaxValue): DataFrame = {
     require(nprobe >= 1 && nprobe <= index.k,
       s"nprobe must be in [1, ${index.k}], got $nprobe")
-    // maxBucketSize: the capTableBuckets contract on the IVF cell key —
+    // maxBucketSize: the cosineNearDupPairs cut on the IVF cell key —
     // cells ∝ corpus bound ORGANIC occupancy, but identical vectors
     // (failed encodes, defaults) all share one nearest centroid at any
     // k, so the within-cell self-join goes quadratic in them exactly
-    // like a saturated hyperplane bucket. First-cap ids per probed cell.
-    val assigned = capTableBuckets(
+    // like a saturated hyperplane bucket. First-cap ids per probed cell;
+    // full embedding vectors ride the cut, hence the same 16 MB budget.
+    val assigned = graft.analytics.BucketCap.cut(
       df.select(col(idCol).as("id"), col("embedding"))
         .withColumn("bucket", explode(index.probes(col("embedding"), nprobe))),
-      maxBucketSize, "ivfNearDupPairs")
+      Seq("bucket"), Seq("id"), maxBucketSize, Signals.LshBucketCut,
+      "ivfNearDupPairs", maxTrackedBytes = 16L << 20)
     val a = assigned.as("a")
     val b = assigned.as("b")
     a.join(b, col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))

@@ -666,29 +666,23 @@ object TextAnalysis {
     * URLs → emails → IPv4 → phones, in that order (URLs can embed
     * emails/IPs; IPs must be consumed before the phone pattern sees
     * digit-dot runs). Each class gets its own sentinel token so
-    * downstream token-count deltas attribute redactions per class. Pure
-    * scan-riding column expression — four codegen'd regex passes, no
-    * shuffle at any scale.
+    * downstream token-count deltas attribute redactions per class. The
+    * `redacted` field of [[piiScrub]] — one fused scan-riding expression,
+    * no shuffle at any scale; its parity with the four-pass
+    * `regexp_replace` chain is spec-pinned (`RepetitionSpec`).
     */
   def redactPii(text: Column,
       emailPattern: String = EmailPattern, ipPattern: String = IpPattern,
       phonePattern: String = PhonePattern): Column =
-    regexp_replace(
-      regexp_replace(
-        regexp_replace(
-          regexp_replace(text, UrlPattern, "<URL>"),
-          emailPattern, "<EMAIL>"),
-        ipPattern, "<IP>"),
-      phonePattern, "<PHONE>")
+    piiScrub(text, emailPattern, ipPattern, phonePattern).getField("redacted")
 
   /** Fused PII battery: counts AND redaction in one traversal per class
     * ([[graft.functions.PiiScrub]] — the relational form pays seven
     * regex walks per row for the same four classes; bit-exact parity
     * with the staged columns is spec-pinned). Returns
     * STRUCT<n_emails, n_ips, n_phones, redacted>; `redacted` is
-    * byte-identical to [[redactPii]] and each count is taken on the
-    * text with earlier classes already substituted (the ql46 staging
-    * convention).
+    * [[redactPii]] and each count is taken on the text with earlier
+    * classes already substituted (the ql46 staging convention).
     */
   def piiScrub(text: Column,
       emailPattern: String = EmailPattern, ipPattern: String = IpPattern,

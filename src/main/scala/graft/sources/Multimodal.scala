@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.core._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -852,19 +852,16 @@ object Multimodal {
                                    bands: Int, maxHamming: Int,
                                    minShared: Int, maxBucketSize: Int,
                                    outCountCol: String): DataFrame = {
-    require(bands > 0 && 64 % bands == 0, s"bands must divide 64, got $bands")
+    val slices = hashSlices(col("h"), bands)
     require(maxHamming >= 0, s"maxHamming must be >= 0, got $maxHamming")
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    val width = 64 / bands
-    val mask = if (width == 64) lit(-1L) else lit((1L << width) - 1)
     val fh = sig
       .select(col(idCol).as("vid"), col(posCol).as("fidx"), col(hashCol).as("h"))
       .filter(col("h").isNotNull)
-    val banded = fh.select(col("vid"), col("fidx"), col("h"),
-      posexplode(array((0 until bands).map(b =>
-        shiftrightunsigned(col("h"), b * width).bitwiseAND(mask)): _*)))
+    val banded = fh.select(col("vid"), col("fidx"), col("h"), posexplode(slices))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
-    val capped = capBuckets(banded, maxBucketSize, Seq("vid", "fidx"),
+    val capped = graft.analytics.BucketCap.cut(banded, Seq("band", "bh"),
+      Seq("vid", "fidx"), maxBucketSize, Signals.PerceptualBucketCut,
       s"sharedSignaturePairs_$outCountCol")
     val a = capped.hint("shuffle_hash").as("a")
     val b = capped.hint("shuffle_hash").as("b")
@@ -1669,6 +1666,14 @@ object Multimodal {
     * quadratically past n ≈ 10^5; pass `corpusSize` to skip the count).
     * A pinned `bands` stays available for oracle replay (the Q-L52
     * convention; Q-M3 pins 4).
+    *
+    * `maxBucketSize` ([[graft.analytics.BucketCap.cut]], firing
+    * `perceptual.bucket_cut`) keeps each (band, bh) bucket's first ids:
+    * a real crawl is full of solid-color images, black frames and
+    * silence — byte-different media with IDENTICAL signatures — and an
+    * uncapped self-join goes quadratic in those buckets (StreamStateBench:
+    * a 100.2× pair blowup at 10×). Size it to the pair budget, ≤
+    * cap·(cap−1)/2 pairs per saturated bucket.
     */
   def perceptualNearDupPairs(media: DataFrame, idCol: String, hashCol: String,
                              bands: Int = 0, maxHamming: Int = 3,
@@ -1683,17 +1688,13 @@ object Multimodal {
       if (bands == 0)
         derivedBands(corpusSize.getOrElse(media.select(col(idCol)).count()), maxHamming)
       else bands
-    require(b0 > 0 && 64 % b0 == 0, s"bands must divide 64, got $b0")
-    val width = 64 / b0
-    val mask = if (width == 64) lit(-1L) else lit((1L << width) - 1)
+    val slices = hashSlices(col("h"), b0)
     val hashed = media.select(col(idCol).as("id"), col(hashCol).as("h"))
       .filter(col("h").isNotNull)
-    val banded = hashed.select(col("id"), col("h"),
-      posexplode(array((0 until b0).map(b =>
-        shiftrightunsigned(col("h"), b * width).bitwiseAND(mask)): _*)))
+    val banded = hashed.select(col("id"), col("h"), posexplode(slices))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
-    val capped = capBuckets(banded, maxBucketSize, Seq("id"),
-      "perceptualNearDupPairs")
+    val capped = graft.analytics.BucketCap.cut(banded, Seq("band", "bh"),
+      Seq("id"), maxBucketSize, Signals.PerceptualBucketCut, "perceptualNearDupPairs")
     // shuffle_hash → both sides share one reused Exchange, so the hash
     // projection (and, upstream, the decode) computes ONCE for the pair
     // stage (the Dedup.candidatePairsFromBands argument — for media the
@@ -1711,109 +1712,16 @@ object Multimodal {
       .dropDuplicates("doc_a", "doc_b")
   }
 
-  /** Observed-metric name prefix for the perceptual bucket cut (suffix =
-    * `<stage>.<seq>` — the stage names the operator whose cut fired, the
-    * per-call sequence number keeps names unique: Spark rejects duplicate
-    * observed-metric names in one query unless the nodes are identical).
+  /** A 64-bit hash cut into `bands` contiguous bit slices, lowest bits
+    * first: the (band, bh) keys of every perceptual band join, batch and
+    * stream, so a stream bucket key is a batch bucket key by construction.
     */
-  private[graft] val BucketCutMetric = "graft.perceptual.bucket_cut"
-  private val bucketCutSeq = new java.util.concurrent.atomic.AtomicLong()
-  private val bucketCutBridged = java.util.Collections.synchronizedSet(
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  /** Sessions carrying a bucket-cut bridge — the listener-hygiene audit
-    * hook ([[graft.llm.Dedup.dfCutBridgedCount]] convention).
-    */
-  private[graft] def bucketCutBridgedCount: Int = bucketCutBridged.size()
-
-  /** Bridge bucket-cut observed metrics → [[graft.core.SignalBus.global]]
-    * + a WARN log, once per session (the [[graft.llm.Dedup]] df-cut
-    * bridge, transplanted): the metric rides the rank window as a
-    * `CollectMetrics` node — no extra job, no extra shuffle — so the
-    * partial recall a cut introduces is OBSERVABLE at zero plan cost; a
-    * `perceptual.bucket_cut` signal fires only when rows were dropped.
-    */
-  private def bridgeBucketCut(spark: SparkSession): Unit =
-    if (bucketCutBridged.add(spark)) {
-      spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-        private def forward(qe: org.apache.spark.sql.execution.QueryExecution): Unit =
-          qe.observedMetrics.foreach { case (name, row) =>
-            if (name.startsWith(BucketCutMetric)) {
-              val dropped = if (row.isNullAt(0)) 0L else row.getLong(0)
-              if (dropped > 0L) {
-                // name = <prefix>.<stage>.<seq> — the stage rides the
-                // observe-node name so the signal attributes the cut to
-                // the operator that fired it, not a hardcoded label
-                // (ADVICE r18: the frame/segment/tile axes all share this
-                // bridge)
-                val rest = name.drop(BucketCutMetric.length + 1)
-                val stage = rest.lastIndexOf('.') match {
-                  case -1 => "perceptualNearDupPairs"
-                  case i  => rest.substring(0, i)
-                }
-                val fields = Map(
-                  "dropped_rows" -> dropped.toString,
-                  "max_bucket_size" -> (if (row.isNullAt(1)) "?" else row.getInt(1).toString))
-                SignalBus.global.emit(Signal(Signals.PerceptualBucketCut,
-                  StageId(stage), fields))
-                org.slf4j.LoggerFactory.getLogger(Multimodal.getClass).warn(
-                  s"perceptual bucket cut in $stage dropped ${fields("dropped_rows")} banded " +
-                    s"rows past cap ${fields("max_bucket_size")}: saturated buckets have partial recall")
-              }
-            }
-          }
-        override def onSuccess(funcName: String,
-                               qe: org.apache.spark.sql.execution.QueryExecution,
-                               durationNs: Long): Unit = forward(qe)
-        override def onFailure(funcName: String,
-                               qe: org.apache.spark.sql.execution.QueryExecution,
-                               error: Exception): Unit = ()
-      })
-    }
-
-  /** Arrival-rank df-cut of saturated (band, bh) buckets — the BATCH twin
-    * of the streaming `maxBucketSize` knob
-    * ([[graft.streaming.Stateful.perceptualNearDupPairsStream]]'s bucket
-    * cap) and the [[graft.llm.Dedup.jaccardSimilarityJoin]]
-    * `maxShingleDocFreq` convention brought to the perceptual band key:
-    * keep each bucket's first `maxBucketSize` rows in `orderCols` order,
-    * drop later arrivals. A real crawl is full of solid-color images,
-    * black frames, and silence — byte-different media hashing to
-    * IDENTICAL 64-bit signatures — and an uncapped banded self-join goes
-    * quadratic in those buckets (the repo's own StreamStateBench measured
-    * a 100.2× pair blowup at 10× on exactly this construction,
-    * COVERAGE.md's volume table). Contracts (spec-pinned): capped pairs ⊆
-    * uncapped pairs; a cap at or above the largest bucket returns the
-    * EXACT uncapped result (under-cap buckets always keep full recall).
-    *
-    * Plan shape: the rank window hash-partitions on (band, bh) — the SAME
-    * distribution the pair self-join needs — so the window's Exchange IS
-    * the join's (one shuffle either way, ReusedExchange across the two
-    * sides; machine-pinned in PlanShapeSpec). The cut is observable via
-    * the `perceptual.bucket_cut` signal (the jaccard df-cut bridge),
-    * never silent. Default Int.MaxValue = uncapped: oracle rows replay
-    * exact semantics; 100 TB callers pass a cap sized to the pair budget
-    * (pairs per saturated bucket ≤ cap·(cap−1)/2).
-    *
-    * Round 19: the rank window now runs over a MAP-SIDE PRE-CUT
-    * ([[graft.analytics.BucketCap.capByRank]] — VERDICT r18 #1): each
-    * input partition keeps only its own first-`maxBucketSize` rows per
-    * (band, bh) before the Exchange, so a saturated bucket's single
-    * reducer task sorts ≤ cap × numPartitions rows instead of the whole
-    * hot bucket — byte-identical output and drop metric by the
-    * containment argument (spec-pinned in `BucketCapSpec`).
-    */
-  private def capBuckets(banded: DataFrame, maxBucketSize: Int,
-                         orderCols: Seq[String], stage: String): DataFrame =
-    if (maxBucketSize == Int.MaxValue) banded
-    else {
-      require(maxBucketSize >= 1, s"maxBucketSize must be >= 1, got $maxBucketSize")
-      bridgeBucketCut(banded.sparkSession)
-      graft.analytics.BucketCap.capByRank(banded, Seq("band", "bh"), orderCols,
-        maxBucketSize,
-        s"$BucketCutMetric.$stage.${bucketCutSeq.incrementAndGet()}")
-    }
+  private[graft] def hashSlices(h: Column, bands: Int): Column = {
+    require(bands > 0 && 64 % bands == 0, s"bands must divide 64, got $bands")
+    val width = 64 / bands
+    val mask = if (width == 64) lit(-1L) else lit((1L << width) - 1)
+    array((0 until bands).map(b => shiftrightunsigned(h, b * width).bitwiseAND(mask)): _*)
+  }
 
   /** One-call perceptual media dedup: hash → banded pairs → keep-best
     * ([[graft.llm.Dedup.dedupKeepBest]] — highest `scoreCol` per

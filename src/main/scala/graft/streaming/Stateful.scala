@@ -340,8 +340,9 @@ object Stateful {
   /** Streaming perceptual near-dup pairs over `(mediaId, dHash64)` rows —
     * the crawl-ingest twin of the batch
     * [[graft.sources.Multimodal.perceptualNearDupPairs]]: the banding
-    * projection is the SAME contiguous-slice arithmetic (a bucket key
-    * here is a bucket key there), and the stateful tail emits exact
+    * projection is the SAME slice function
+    * ([[graft.sources.Multimodal.hashSlices]] — a bucket key here is a
+    * bucket key there by construction), and the stateful tail emits exact
     * Hamming-scored pairs as buckets fill. Pairs may emit once per
     * colliding band — compare as sets or dedup downstream, the
     * [[minHashLshCandidatePairsStream]] contract. NULL hashes
@@ -358,16 +359,12 @@ object Stateful {
                                    ttl: TTLConfig = TTLConfig.NONE): Dataset[(Long, Long, Int)] = {
     import media.sparkSession.implicits._
     import org.apache.spark.sql.functions._
-    require(bands > 0 && 64 % bands == 0, s"bands must divide 64, got $bands")
+    val slices = graft.sources.Multimodal.hashSlices(col("h"), bands)
     require(maxHamming >= 0, s"maxHamming must be >= 0, got $maxHamming")
     require(maxBucketSize >= 1, s"maxBucketSize must be >= 1, got $maxBucketSize")
-    val width = 64 / bands
-    val mask = if (width == 64) lit(-1L) else lit((1L << width) - 1)
     val banded = media.toDF("id", "h")
       .filter(col("h").isNotNull)
-      .select(col("id"), col("h"),
-        posexplode(array((0 until bands).map(b =>
-          shiftrightunsigned(col("h"), b * width).bitwiseAND(mask)): _*)))
+      .select(col("id"), col("h"), posexplode(slices))
       .select(col("pos").cast("int").as("band"), col("col").as("bh"),
         col("id"), col("h"))
       .as[(Int, Long, Long, Long)]

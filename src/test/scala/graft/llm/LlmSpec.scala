@@ -688,6 +688,41 @@ class LlmSpec extends SparkSpec {
     assert(crossOnly.nonEmpty && crossOnly.subsetOf(newPairs) && (newPairs -- crossOnly).nonEmpty)
   }
 
+  test("a band index without bha fails loudly at every candidate entry; BandIndex.upgrade converts it") {
+    val docs = graft.sources.Tables.load(spark, sf, "documents")
+    val old = docs.filter(col("doc_id") % 3 =!= 0)
+    val fresh = docs.filter(col("doc_id") % 3 === 0)
+    val current = Dedup.BandIndex.build(old, "doc_id", "text", numHashes = 32, bands = 4)
+    // the row format every index had before the band-hash arrays
+    val legacy = current.drop("bha")
+    def named(f: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](f)
+      assert(e.getMessage.contains("BandIndex.upgrade"), e.getMessage)
+    }
+    named(Dedup.minHashLshCandidatesFromIndex(legacy, numHashes = 32, bands = 4))
+    named(Dedup.minHashLshCandidatesFromIndex(legacy, numHashes = 32, bands = 4,
+      maxBucketSize = 5))
+    named(Dedup.minHashLshCandidatesAgainst(fresh, "doc_id", "text", legacy,
+      numHashes = 32, bands = 4))
+    named(Dedup.minHashLshCandidatesAgainstIndex(legacy, current, numHashes = 32,
+      maxBucketSize = 5))
+    val upgraded = Dedup.BandIndex.upgrade(legacy, 4)
+    assert(upgraded.columns.toSeq == Seq("id", "mh", "bha", "band", "bh"))
+    assert(rowsOf(upgraded) == rowsOf(current))
+    assert(Dedup.BandIndex.upgrade(current, 4) eq current,
+      "an index in the current format must pass through untouched")
+    // a wrong banding fails the query instead of silently losing pairs
+    val wrong = intercept[Exception](Dedup.BandIndex.upgrade(legacy, 8).collect())
+    assert(Iterator.iterate[Throwable](wrong)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("does not match the banding")),
+      wrong.toString)
+    val pairs = rowsOf(Dedup.minHashLshCandidatesAgainst(fresh, "doc_id", "text", current,
+      numHashes = 32, bands = 4).select("doc_a", "doc_b"))
+    assert(pairs.nonEmpty)
+    assert(rowsOf(Dedup.minHashLshCandidatesAgainst(fresh, "doc_id", "text", upgraded,
+      numHashes = 32, bands = 4).select("doc_a", "doc_b")) == pairs)
+  }
+
   test("word/char ngrams and jaccard") {
     val df = Seq(Tuple1("a b c d")).toDF("t")
     val grams = df.select(Dedup.wordNgrams(col("t"), 2).as("g")).head().getSeq[String](0)

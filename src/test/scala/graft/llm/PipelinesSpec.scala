@@ -355,6 +355,35 @@ class PipelinesSpec extends SparkSpec {
       "a legacy state must load with the exact (uncapped) semantics it was built with")
   }
 
+  test("CrawlState.load converts an index saved before bha, and the append matches the current format (ADVICE r22 #2)") {
+    val docsA = (70 to 75).map(i => (i.toLong, goodDoc(i), "en"))
+      .toDF("doc_id", "text", "lang")
+    val docsB = (Seq((80L, goodDoc(70).replace("w70x0y1", "altered"), "en")) ++
+      (81 to 82).map(i => (i.toLong, goodDoc(i), "en"))).toDF("doc_id", "text", "lang")
+    // non-default bands: the conversion must band at the state's own setting
+    val params = Pipelines.CrawlParams(numHashes = 32, bands = 4)
+    val dir = java.nio.file.Files.createTempDirectory("crawl_pre_bha").toString
+    Pipelines.initCrawlState(docsA, params).save(s"$dir/current")
+    Pipelines.initCrawlState(docsA, params).save(s"$dir/legacy")
+    // rewrite the index WITHOUT bha — the on-disk shape of every state
+    // saved before the band-hash arrays existed
+    val index = spark.read.parquet(s"$dir/legacy/index").drop("bha")
+    val rows = index.collect().toSeq
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), index.schema)
+      .write.mode("overwrite").parquet(s"$dir/legacy/index")
+    assert(!spark.read.parquet(s"$dir/legacy/index").columns.contains("bha"))
+    val legacy = Pipelines.appendCrawlBatch(
+      Pipelines.CrawlState.load(spark, s"$dir/legacy"), docsB)
+    val current = Pipelines.appendCrawlBatch(
+      Pipelines.CrawlState.load(spark, s"$dir/current"), docsB)
+    val pairs = rowsOf(current.pairs)
+    assert(pairs.contains(Seq(70L, 80L)), s"the planted near-dup must pair: $pairs")
+    assert(rowsOf(legacy.pairs) == pairs)
+    assert(rowsOf(legacy.index) == rowsOf(current.index))
+    legacy.release()
+    current.release()
+  }
+
   test("checkpoint() bounds gateCaches across a 12-append session (no unbounded growth)") {
     import spark.implicits._
     spark.sqlContext.clearCache()

@@ -1,14 +1,19 @@
 package graft.runtime
 
 import graft.SparkSpec
+import graft.analytics.BucketCap
 import graft.llm.Dedup
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Listener hygiene — the Verify harness runs 90+ queries on ONE session,
   * and several operators register QueryExecutionListeners (the RowSignals
-  * observed-metrics bridge, the jaccard df-cut bridge). A per-call leak
-  * would tax every subsequent query with listener-bus fan-out and pin
-  * DataFrames in the heap; these pins assert registration is idempotent
-  * at Verify scale.
+  * observed-metrics bridge, the one cut bridge every bucket and df-cut
+  * forwards through). A per-call leak would tax every subsequent query
+  * with listener-bus fan-out and pin DataFrames in the heap; these pins
+  * assert registration is idempotent at Verify scale, and a source scan
+  * keeps new per-module bridges from growing back.
   */
 class ListenerHygieneSpec extends SparkSpec {
   import spark.implicits._
@@ -25,10 +30,10 @@ class ListenerHygieneSpec extends SparkSpec {
     val docs = Seq((1L, "a b c d"), (2L, "a b c e"), (3L, "x y z w"))
       .toDF("doc_id", "text")
     Dedup.jaccardSimilarityJoin(docs, "doc_id", "text").count()
-    val after1 = Dedup.dfCutBridgedCount
+    val after1 = BucketCap.bridgedCount
     (1 to 5).foreach(_ => Dedup.jaccardSimilarityJoin(docs, "doc_id", "text").count())
-    assert(Dedup.dfCutBridgedCount == after1,
-      s"df-cut bridge leaked: $after1 -> ${Dedup.dfCutBridgedCount}")
+    assert(BucketCap.bridgedCount == after1,
+      s"df-cut bridge leaked: $after1 -> ${BucketCap.bridgedCount}")
   }
 
   test("repeated capped perceptual joins register exactly one bucket-cut bridge per session") {
@@ -37,10 +42,21 @@ class ListenerHygieneSpec extends SparkSpec {
     def run(): Unit = graft.sources.Multimodal.perceptualNearDupPairs(
       media, "id", "h", bands = 4, maxBucketSize = 2).count()
     run()
-    val after1 = graft.sources.Multimodal.bucketCutBridgedCount
+    val after1 = BucketCap.bridgedCount
     (1 to 5).foreach(_ => run())
-    assert(graft.sources.Multimodal.bucketCutBridgedCount == after1,
-      s"bucket-cut bridge leaked: $after1 -> ${graft.sources.Multimodal.bucketCutBridgedCount}")
+    assert(BucketCap.bridgedCount == after1,
+      s"bucket-cut bridge leaked: $after1 -> ${BucketCap.bridgedCount}")
+  }
+
+  test("listeners are registered only by RowSignals, Listeners, the cut bridge and the probe") {
+    val root = Paths.get("src/main/scala")
+    val registering = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => Files.readString(p).contains("listenerManager.register"))
+      .map(p => root.relativize(p).toString).toSet
+    assert(registering == Set("graft/runtime/RowSignals.scala",
+      "graft/runtime/Listeners.scala", "graft/analytics/BucketCap.scala",
+      "graft/tools/Probe.scala"), s"listener registrations in $registering")
   }
 
   test("detach removes the bridge so per-pipeline buses can be torn down") {

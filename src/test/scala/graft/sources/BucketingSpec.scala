@@ -77,6 +77,42 @@ class BucketingSpec extends SparkSpec {
     }
   }
 
+  test("BandIndex.upgrade keeps a bucketed pre-bha index Exchange-free on the index side") {
+    val dir = Files.createTempDirectory("bandidx_pre_bha").toString
+    val docs = Tables.load(spark, sf, "documents").select($"doc_id", $"text")
+    val old = docs.filter($"doc_id" % 5 =!= 0)
+    val batch = docs.filter($"doc_id" % 5 === 0)
+    val idx = graft.llm.Dedup.BandIndex.build(old, "doc_id", "text")
+    graft.llm.Dedup.BandIndex.saveBucketed(idx.drop("bha"), "b_bandindex_pre_bha",
+      s"$dir/idx", numBuckets = 8)
+    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val upgraded = graft.llm.Dedup.BandIndex.upgrade(
+        graft.llm.Dedup.BandIndex.loadBucketed(spark, "b_bandindex_pre_bha"), 8)
+      assert(Bucketing.isShuffleFree(
+        upgraded.groupBy("band", "bh").agg(count(lit(1)).as("n"))),
+        "the conversion must keep the (band, bh) bucketing")
+      val batchBands = graft.llm.Dedup.BandIndex.build(batch, "doc_id", "text")
+      val joined = batchBands.as("a").join(upgraded.as("b"),
+        col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
+      val plan = joined.queryExecution.executedPlan.toString
+      assert("Exchange".r.findAllIn(plan).size == 1,
+        s"expected exactly the batch-side Exchange:\n$plan")
+      val viaUpgraded = rowsOf(graft.llm.Dedup.minHashLshCandidatesAgainst(
+        batch, "doc_id", "text", upgraded).select("doc_a", "doc_b"))
+      val viaMem = rowsOf(graft.llm.Dedup.minHashLshCandidatesAgainst(
+        batch, "doc_id", "text", idx).select("doc_a", "doc_b"))
+      assert(viaUpgraded == viaMem && viaUpgraded.nonEmpty)
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      spark.sql("DROP TABLE IF EXISTS b_bandindex_pre_bha")
+    }
+  }
+
   test("readBucketedOrRegister: a dropped catalog entry re-registers from the sidecar (fresh-application path)") {
     val dir = Files.createTempDirectory("bandidx_fresh").toString
     val docs = Tables.load(spark, sf, "documents").select($"doc_id", $"text")
