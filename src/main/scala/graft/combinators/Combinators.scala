@@ -57,29 +57,15 @@ object Sequence {
   def apply(name: String)(stages: Stage*): Sequence = Sequence(StageId(name), stages)
 }
 
-/** Pin an expression to a hidden column evaluated ONCE against the
-  * frame's CURRENT values — the single-pass fast paths of Filter/Switch
-  * must gate/route every output column by the INPUT's condition/key even
-  * when an output overwrites a column the expression reads (re-evaluating
-  * per column would diverge from the split-union semantics). The hidden
-  * name is chosen collision-free and dropped from the result.
-  */
-private[combinators] object Pin {
-  def withPinned(df: DataFrame, expr: Column)(
-      body: (DataFrame, Column) => DataFrame): DataFrame = {
-    var name = "__graft_pin__"
-    while (df.columns.contains(name)) name += "_"
-    body(df.withColumn(name, expr), col(name)).drop(name)
-  }
-}
-
 /** C6 Filter — predicate gate: rows satisfying `cond` run through the
   * wrapped stage; others pass through unchanged (`filter.go:76-118`).
   *
-  * When the wrapped stage is schema-preserving this is the two-way
-  * split-and-union; Catalyst collapses the trivial cases. The wrapped stage
-  * may add columns — passthrough rows get NULLs there (unionByName with
-  * allowMissingColumns).
+  * A wrapped [[graft.stages.Transform]] runs in one pass: the row
+  * observation, then [[ErrorChannel.write]] gated by `coalesce(cond,
+  * false)`, so `cond` is read once per row, against the input. Any other
+  * stage runs as the two-way split-and-union; Catalyst collapses the
+  * trivial cases. The wrapped stage may add columns — passthrough rows get
+  * NULLs there (unionByName with allowMissingColumns).
   */
 final case class Filter(id: StageId, cond: Column, stage: Stage) extends Stage {
   // Composition-time signal (phase=composed) marks that a Filter entered
@@ -99,18 +85,11 @@ final case class Filter(id: StageId, cond: Column, stage: Stage) extends Stage {
     // split-union form re-reads the source per branch, which at 100 TB
     // doubles the scan).
     case t: graft.stages.Transform =>
-      val out = Pin.withPinned(df, coalesce(cond, lit(false))) { (gated, gate) =>
-        val obs = graft.runtime.RowSignals.observe(gated, Signals.FilterPassed, id, "gate", Seq(
-          count(when(gate, 1)).as("rows_passed"),
-          count(when(!gate, 1)).as("rows_filtered")))
-        t.outs.foldLeft(obs) { case (d, (name, value)) =>
-          val base: Column = if (d.columns.contains(name)) col(name) else lit(null)
-          val guarded = when(gate, value).otherwise(base)
-          if (ErrorChannel.hasChannel(d)) ErrorChannel.onGood(d)(name, guarded)
-          else d.withColumn(name, guarded)
-        }
-      }
-      ErrorChannel.prependPath(out, id)
+      val gate = coalesce(cond, lit(false))
+      val obs = graft.runtime.RowSignals.observe(df, Signals.FilterPassed, id, "gate", Seq(
+        count(when(gate, 1)).as("rows_passed"),
+        count(when(!gate, 1)).as("rows_filtered")))
+      ErrorChannel.prependPath(ErrorChannel.write(obs, Some(gate))(_ => t.outs), id)
     case _ =>
       // per-branch observation: the input subtree executes once per branch,
       // so observing it BEFORE the split would double-count
@@ -136,9 +115,12 @@ object Filter {
   * unmatched rows pass through unchanged (`switch.go:86-127`, no-route
   * passthrough at `switch.go:104-107`).
   *
-  * Single-column routes collapse (by Catalyst) to a CASE WHEN; structural
-  * routes become filter→stage→unionByName branches. Routes are an immutable
-  * map; `addRoute`/`removeRoute` return copies (`switch.go:130-190` analog).
+  * When every route is a [[graft.stages.Transform]], the routes compile to
+  * one `CASE key WHEN …` chain per output name, written by
+  * [[ErrorChannel.write]] with `key` read once per row, against the input;
+  * other routes become filter→stage→unionByName branches. Routes are an
+  * immutable map; `addRoute`/`removeRoute` return copies
+  * (`switch.go:130-190` analog).
   */
 final case class Switch(id: StageId, key: Column, routes: Seq[(String, Stage)]) extends Stage {
   def apply(df: DataFrame): DataFrame = {
@@ -163,24 +145,18 @@ final case class Switch(id: StageId, key: Column, routes: Seq[(String, Stage)]) 
     */
   private def singlePass(df: DataFrame): DataFrame = {
     // one scan, one observation: routed vs no-route counts ride the scan
-    // (row-level switch.routed fidelity — see runtime.RowSignals); the
-    // routing key is pinned to INPUT values (see Pin)
-    val keys = routes.map(_._1)
-    Pin.withPinned(df, key) { (keyed, pinnedKey) =>
-      val matched = coalesce(pinnedKey.isin(keys.map(lit): _*), lit(false))
-      val obs = graft.runtime.RowSignals.observe(keyed, Signals.SwitchRouted, id, "all", Seq(
-        count(when(matched, 1)).as("rows_routed"),
-        count(when(!matched, 1)).as("rows_no_route")))
-      val outNames = routes.flatMap(_._2.asInstanceOf[graft.stages.Transform].outs.map(_._1)).distinct
-      outNames.foldLeft(obs) { (d, name) =>
-        val base: Column = if (d.columns.contains(name)) col(name) else lit(null)
-        val cased = routes.foldRight(base) { case ((k, s), acc) =>
-          s.asInstanceOf[graft.stages.Transform].outs.collectFirst {
-            case (`name`, value) => when(pinnedKey === lit(k), value).otherwise(acc)
-          }.getOrElse(acc)
+    // (row-level switch.routed fidelity — see runtime.RowSignals)
+    val matched = coalesce(key.isin(routes.map(r => lit(r._1)): _*), lit(false))
+    val obs = graft.runtime.RowSignals.observe(df, Signals.SwitchRouted, id, "all", Seq(
+      count(when(matched, 1)).as("rows_routed"),
+      count(when(!matched, 1)).as("rows_no_route")))
+    val outs = routes.map { case (k, s) => k -> s.asInstanceOf[graft.stages.Transform].outs }
+    ErrorChannel.write(obs, Some(key), gated = false) { k =>
+      outs.flatMap(_._2.map(_._1)).distinct.map { name =>
+        val prior: Column = if (df.columns.contains(name)) col(name) else lit(null)
+        name -> outs.foldRight(prior) { case ((route, routeOuts), acc) =>
+          routeOuts.collectFirst { case (`name`, v) => when(k === lit(route), v).otherwise(acc) }.getOrElse(acc)
         }
-        if (ErrorChannel.hasChannel(d)) ErrorChannel.onGood(d)(name, cased)
-        else d.withColumn(name, cased)
       }
     }
   }
@@ -235,9 +211,7 @@ final case class Fallback(
     if (alternatives.size > 1)
       SignalBus.global.emit(Signals.FallbackTriggered, id,
         "alternatives" -> alternatives.size.toString, "phase" -> "composed")
-    val value = coalesce(alternatives: _*)
-    val base = if (ErrorChannel.hasChannel(df)) ErrorChannel.onGood(df)(out, value)
-               else df.withColumn(out, value)
+    val base = ErrorChannel.write(df)(_ => Seq(out -> coalesce(alternatives: _*)))
     val marked = ErrorChannel.markWhere(
       base, id, col(out).isNull,
       lit(s"all ${alternatives.size} alternatives failed")

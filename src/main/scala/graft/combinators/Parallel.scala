@@ -5,10 +5,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.storage.StorageLevel
 
-import java.util.concurrent.{Executors, TimeUnit}
+import java.util.concurrent.Executors
 import scala.concurrent.duration._
 import scala.concurrent.{Await, ExecutionContext, ExecutionContextExecutorService, Future, Promise}
-import scala.util.{Failure, Success, Try}
+import scala.util.{Failure, Try}
 
 /** Driver-side fan-out machinery shared by the parallel connectors
   * (C2 Concurrent, C3 Race, C4 Contest, C14 WorkerPool, C15 Scaffold).
@@ -18,6 +18,9 @@ import scala.util.{Failure, Success, Try}
   * what we add is a `persist` on the shared input so N branch *jobs* don't
   * re-read the source N times. Branch jobs run under their own Spark job
   * group so losers can be cancelled (`race.go:120-123` → `cancelJobGroup`).
+  * Race and Contest are one first-winner runner ([[firstWinner]]) and one
+  * lazy first-qualifying-branch path ([[firstLazy]]), differing only in
+  * what qualifies a branch and in their signals.
   *
   * Scale note: everything here fans out *jobs*, never rows; no branch
   * result is collected to the driver — reducers stay in Catalyst.
@@ -49,6 +52,81 @@ object Fanout {
     */
   def collectReduced[A](into: java.util.Queue[DataFrame])(body: => A): A =
     reduced.withValue(Some(into))(body)
+
+  /** Lazy composition for Race and Contest: the first branch whose plan
+    * `qualifies`, checked in declaration order. Every branch checked must
+    * be deterministic — a nondeterministic plan could qualify at check
+    * time and produce different rows when the composed query finally runs.
+    */
+  private[combinators] def firstLazy(kind: String, id: StageId, branches: Seq[Stage], df: DataFrame)(
+      qualifies: DataFrame => Boolean): Option[(Stage, DataFrame)] = {
+    require(branches.nonEmpty, s"$kind needs at least one branch")
+    branches.iterator.map { b =>
+      val out = b(df)
+      require(out.queryExecution.analyzed.deterministic,
+        s"$kind ${id.name}: lazy composition requires deterministic branch plans — use run() instead")
+      (b, out)
+    }.find { case (_, out) => qualifies(out) }
+  }
+
+  /** The eager runner behind `Race.run` and `Contest.run`: share the
+    * input, run each branch in its own job group, persist and count its
+    * output, and declare the first output that `qualifies` the winner
+    * (`won(i)`), cancelling the other branches. The winner stays persisted
+    * for the caller and is tracked in `winners` for close(); every other
+    * branch output is released, including one whose count or `qualifies`
+    * threw, and the shared input once every branch has finished. When every
+    * branch settles without a winner the run fails with
+    * `noWinner(last failure, if the last branch to settle threw)`.
+    */
+  private[combinators] def firstWinner(kind: String, id: StageId, branches: Seq[Stage], df: DataFrame,
+                                       winners: Tracker)(qualifies: DataFrame => Boolean)(
+      won: Int => Unit, noWinner: Option[Throwable] => Throwable): DataFrame = {
+    require(branches.nonEmpty, s"$kind needs at least one branch")
+    val shared = share(df)
+    val sc = df.sparkSession.sparkContext
+    val ec = pool(branches.size)
+    val done = Promise[DataFrame]()
+    val winner = new java.util.concurrent.atomic.AtomicReference[DataFrame]()
+    val settled, finished = new java.util.concurrent.atomic.AtomicInteger(0)
+    def group(i: Int) = s"${id.name}-branch-$i"
+    // CacheManager keys cached data by PLAN: when two branches build the
+    // SAME plan (racing one plan against itself is legitimate), a loser's
+    // release would evict the WINNER's cache entry — skip it when the
+    // decided winner shares this branch's plan
+    def release(out: DataFrame): Unit =
+      if (!Option(winner.get).exists(_.queryExecution.analyzed.sameResult(out.queryExecution.analyzed)))
+        out.unpersist(blocking = false)
+    def settle(failure: Option[Throwable]): Unit =
+      if (settled.incrementAndGet() == branches.size) done.tryFailure(noWinner(failure))
+    try {
+      branches.zipWithIndex.foreach { case (b, i) =>
+        Future {
+          sc.setJobGroup(group(i), s"$kind branch $i", interruptOnCancel = true)
+          var out: DataFrame = null
+          try {
+            out = b(shared).persist(StorageLevel.MEMORY_AND_DISK)
+            out.count() // materialize: the "finish line"
+            if (qualifies(out) && winner.compareAndSet(null, out)) {
+              // signals and cancels go out before run() returns the winner
+              won(i)
+              branches.indices.filter(_ != i).foreach(j => sc.cancelJobGroup(group(j)))
+              done.success(out)
+            } else { release(out); settle(None) }
+          } catch {
+            case t: Throwable => Option(out).foreach(release); settle(Some(t))
+          } finally {
+            sc.clearJobGroup()
+            // the shared input goes after every branch has released its
+            // output: uncaching it re-plans the caches built on it, which
+            // would put back a loser released at the same moment
+            if (finished.incrementAndGet() == branches.size) shared.unpersist(blocking = false)
+          }
+        }(ec)
+      }
+      winners.track(Await.result(done.future, Duration.Inf))
+    } finally ec.shutdown()
+  }
 
   /** Tracks a stage's persisted fan-out inputs so `close()` can release
     * them — without this, long-lived drivers accumulate cached inputs
@@ -143,79 +221,28 @@ object Concurrent {
   * `timeout.go:25-27`).
   */
 final case class Race(id: StageId, branches: Seq[Stage]) extends Stage {
-
   // the winner stays persisted for the caller to compose on; close()
-  // owns its release (the shared input and losers are released in run)
+  // owns its release (the runner releases the shared input and losers)
   private val winnerCaches = new Fanout.Tracker
 
-  /** Lazy composition (used when Race wraps pure plans and the caller wants
-    * one query): first branch's plan. Semantically valid ONLY when branch
-    * plans are deterministic and failure-free — then all branches "win"
-    * identically and the first is as good as any. The assertion rejects the
-    * obvious misuse (wrapping nondeterministic plans and expecting runtime
-    * racing); genuinely fallible or timing-dependent branches need `run`.
+  /** Lazy composition: the first branch's plan. Valid ONLY when branch
+    * plans are deterministic and failure-free — then every branch "wins"
+    * identically; fallible or timing-dependent branches need `run`.
     */
-  def apply(df: DataFrame): DataFrame = {
-    require(branches.nonEmpty, "race needs at least one branch")
-    val out = branches.head(df)
-    require(out.queryExecution.analyzed.deterministic,
-      s"race ${id.name}: lazy composition requires a deterministic branch plan — use run() instead")
-    out
-  }
+  def apply(df: DataFrame): DataFrame =
+    Fanout.firstLazy("race", id, branches, df)(_ => true).get._2
 
   /** Eager first-success-wins over materialized branch jobs. */
-  def run(df: DataFrame): DataFrame = {
-    require(branches.nonEmpty, "race needs at least one branch")
-    val shared = Fanout.share(df)
-    val spark = df.sparkSession
-    val sc = spark.sparkContext
-    val ec = Fanout.pool(branches.size)
-    val done = Promise[(Int, DataFrame)]()
-    val failures = new java.util.concurrent.atomic.AtomicInteger(0)
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    try {
-      branches.zipWithIndex.foreach { case (b, i) =>
-        Future {
-          val group = s"${id.name}-branch-$i"
-          sc.setJobGroup(group, s"race branch $i", interruptOnCancel = true)
-          try {
-            val out = b(shared).persist(StorageLevel.MEMORY_AND_DISK)
-            out.count() // materialize: the "finish line"
-            if (done.trySuccess((i, out))) {
-              SignalBus.global.emit(Signals.RaceWinner, id, "winner" -> b.id.name)
-              // cancel the stragglers (race.go:120-123)
-              branches.indices.filter(_ != i).foreach { j =>
-                sc.cancelJobGroup(s"${id.name}-branch-$j")
-                SignalBus.global.emit(Signals.RaceLost, id, "loser" -> branches(j).id.name)
-              }
-            } else {
-              // CacheManager keys cached data by PLAN: when two branches
-              // build the SAME plan (racing one plan against itself is
-              // legitimate), the loser's release would evict the WINNER's
-              // cache entry — skip it when the decided winner shares this
-              // branch's plan
-              val winner = done.future.value.flatMap(_.toOption).map(_._2)
-              val samePlan = winner.exists(
-                _.queryExecution.analyzed.sameResult(out.queryExecution.analyzed))
-              if (!samePlan) out.unpersist(blocking = false)
-            }
-          } catch {
-            case t: Throwable =>
-              errs.add(t)
-              if (failures.incrementAndGet() == branches.size)
-                done.tryFailure(new RuntimeException(
-                  s"race ${id.name}: all ${branches.size} branches failed", t))
-          } finally sc.clearJobGroup()
-        }(ec)
-      }
-      // winner is materialized in its own cache (released at close);
-      // shared input is released in the finally — also on failure paths
-      winnerCaches.track(Await.result(done.future, Duration.Inf)._2)
-    } finally {
-      shared.unpersist(blocking = false)
-      ec.shutdown()
-    }
-  }
+  def run(df: DataFrame): DataFrame =
+    Fanout.firstWinner("race", id, branches, df, winnerCaches)(_ => true)(
+      won = i => {
+        SignalBus.global.emit(Signals.RaceWinner, id, "winner" -> branches(i).id.name)
+        // the stragglers are cancelled (race.go:120-123)
+        branches.indices.filter(_ != i).foreach(j =>
+          SignalBus.global.emit(Signals.RaceLost, id, "loser" -> branches(j).id.name))
+      },
+      noWinner = last => new RuntimeException(
+        s"race ${id.name}: all ${branches.size} branches failed", last.orNull))
 
   override def plan: PlanNode = PlanNode("Race", id, branches.map(_.plan))
   override def close(): Unit = { winnerCaches.release(); branches.foreach(_.close()) }
@@ -238,89 +265,28 @@ final case class Contest(
 ) extends Stage {
   private val winnerCaches = new Fanout.Tracker
 
-  /** Lazy composition: the deterministic analog of the runtime contest —
-    * branches are checked in declaration order and the first whose plan
-    * meets `condition` is returned; none qualifying → error, mirroring
-    * `run`'s no-winner contract (`contest.go:174-189`). Unlike Race, the
-    * winner predicate CANNOT be deferred (returning branch 1 unchecked
-    * would silently hand back a non-qualifying result), so `condition` is
-    * evaluated here, driver-side, branch by branch — "lazy" refers to the
-    * returned plan, which stays uncached and composable. Each branch must
-    * be deterministic (same require as `Race.apply`): a nondeterministic
-    * plan could qualify at check time and produce different rows when the
-    * composed query finally runs.
+  /** Lazy composition: the first deterministic branch whose plan meets
+    * `condition`, in declaration order; none qualifying → error, as in
+    * `run`. `condition` runs here, driver-side (returning branch 1
+    * unchecked could hand back a non-qualifying result); "lazy" refers to
+    * the returned plan, which stays uncached and composable.
     */
-  def apply(df: DataFrame): DataFrame = {
-    require(branches.nonEmpty, "contest needs at least one branch")
-    val it = branches.iterator.map { b =>
-      val out = b(df)
-      require(out.queryExecution.analyzed.deterministic,
-        s"contest ${id.name}: lazy composition requires deterministic branch plans — use run() instead")
-      (b, out)
+  def apply(df: DataFrame): DataFrame =
+    Fanout.firstLazy("contest", id, branches, df)(condition) match {
+      case Some((b, out)) =>
+        SignalBus.global.emit(Signals.ContestWinner, id, "winner" -> b.id.name)
+        out
+      case None => throw noWinner(None)
     }
-    it.collectFirst { case (b, out) if condition(out) =>
-      SignalBus.global.emit(Signals.ContestWinner, id, "winner" -> b.id.name)
-      out
-    }.getOrElse {
-      SignalBus.global.emit(Signals.ContestNoWinner, id)
-      throw new RuntimeException(s"contest ${id.name}: no branch met the condition")
-    }
-  }
 
-  def run(df: DataFrame): DataFrame = {
-    require(branches.nonEmpty, "contest needs at least one branch")
-    val shared = Fanout.share(df)
-    val sc = df.sparkSession.sparkContext
-    val ec = Fanout.pool(branches.size)
-    val done = Promise[(Int, DataFrame)]()
-    val settled = new java.util.concurrent.atomic.AtomicInteger(0)
-    try {
-      branches.zipWithIndex.foreach { case (b, i) =>
-        Future {
-          val group = s"${id.name}-branch-$i"
-          sc.setJobGroup(group, s"contest branch $i", interruptOnCancel = true)
-          val qualified = Try {
-            val out = b(shared).persist(StorageLevel.MEMORY_AND_DISK)
-            out.count()
-            (out, condition(out))
-          }
-          // same plan-keyed-cache rule as Race: never release a frame
-          // whose plan the decided winner shares
-          def releaseUnlessWinnerPlan(out: DataFrame): Unit = {
-            val winner = done.future.value.flatMap(_.toOption).map(_._2)
-            val samePlan = winner.exists(
-              _.queryExecution.analyzed.sameResult(out.queryExecution.analyzed))
-            if (!samePlan) out.unpersist(blocking = false)
-          }
-          qualified match {
-            case Success((out, true)) =>
-              if (done.trySuccess((i, out))) {
-                SignalBus.global.emit(Signals.ContestWinner, id, "winner" -> b.id.name)
-                branches.indices.filter(_ != i).foreach(j =>
-                  sc.cancelJobGroup(s"${id.name}-branch-$j"))
-              } else releaseUnlessWinnerPlan(out)
-            case Success((out, false)) =>
-              releaseUnlessWinnerPlan(out)
-              if (settled.incrementAndGet() == branches.size) {
-                SignalBus.global.emit(Signals.ContestNoWinner, id)
-                done.tryFailure(new RuntimeException(
-                  s"contest ${id.name}: no branch met the condition")) // contest.go:174-189
-              }
-            case Failure(t) =>
-              if (settled.incrementAndGet() == branches.size) {
-                SignalBus.global.emit(Signals.ContestNoWinner, id)
-                done.tryFailure(new RuntimeException(
-                  s"contest ${id.name}: no branch met the condition", t))
-              }
-          }
-          sc.clearJobGroup()
-        }(ec)
-      }
-      winnerCaches.track(Await.result(done.future, Duration.Inf)._2)
-    } finally {
-      shared.unpersist(blocking = false)
-      ec.shutdown()
-    }
+  def run(df: DataFrame): DataFrame =
+    Fanout.firstWinner("contest", id, branches, df, winnerCaches)(condition)(
+      won = i => SignalBus.global.emit(Signals.ContestWinner, id, "winner" -> branches(i).id.name),
+      noWinner = noWinner)
+
+  private def noWinner(last: Option[Throwable]): Throwable = {
+    SignalBus.global.emit(Signals.ContestNoWinner, id)
+    new RuntimeException(s"contest ${id.name}: no branch met the condition", last.orNull) // contest.go:174-189
   }
 
   override def plan: PlanNode = PlanNode("Contest", id, branches.map(_.plan))

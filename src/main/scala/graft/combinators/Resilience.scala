@@ -2,6 +2,7 @@ package graft.combinators
 
 import graft.core._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
 
 import scala.concurrent.duration._
 import scala.concurrent.{Await, Future, TimeoutException}
@@ -23,22 +24,33 @@ import scala.util.{Failure, Success, Try}
 final case class Retry(id: StageId, maxAttempts: Int) {
   require(maxAttempts >= 1, "maxAttempts must be >= 1")
 
-  def run[A](body: => A): A = {
-    var last: Throwable = null
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      SignalBus.global.emit(Signals.RetryAttempt, id, "attempt" -> attempt.toString)
-      try return body
-      catch { case NonFatal(t) => last = t }
-    }
-    SignalBus.global.emit(Signals.RetryExhausted, id, "attempts" -> maxAttempts.toString)
-    throw new RuntimeException(s"${id.name}: exhausted $maxAttempts attempts", last) // retry.go:119-142
-  }
+  def run[A](body: => A): A =
+    Retry.attempts(id, maxAttempts)(body)(
+      attempt = n => SignalBus.global.emit(Signals.RetryAttempt, id, "attempt" -> n.toString),
+      exhausted = () => SignalBus.global.emit(Signals.RetryExhausted, id, "attempts" -> maxAttempts.toString))
 }
 
 object Retry {
   def apply(name: String, maxAttempts: Int): Retry = Retry(StageId(name), maxAttempts)
+
+  /** The attempt loop shared by Retry and Backoff: run `body` up to
+    * `maxAttempts` times, calling `attempt(n)` before attempt n; when every
+    * attempt throws, call `exhausted()` and fail with the last error
+    * (`retry.go:119-142`).
+    */
+  private[combinators] def attempts[A](id: StageId, maxAttempts: Int)(body: => A)(
+      attempt: Int => Unit, exhausted: () => Unit = () => ()): A = {
+    var last: Throwable = null
+    var n = 0
+    while (n < maxAttempts) {
+      n += 1
+      attempt(n)
+      try return body
+      catch { case NonFatal(t) => last = t }
+    }
+    exhausted()
+    throw new RuntimeException(s"${id.name}: exhausted $maxAttempts attempts", last)
+  }
 
   /** Row-tier recovery: replay a stage over its dead-letter rows up to
     * `maxAttempts` times, unioning recovered rows back — the per-row analog
@@ -70,23 +82,13 @@ final case class Backoff(
   require(maxAttempts >= 1, "maxAttempts must be >= 1")
 
   def run[A](body: => A): A = {
-    var last: Throwable = null
     var delay = baseDelay
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      try return body
-      catch {
-        case NonFatal(t) =>
-          last = t
-          if (attempt < maxAttempts) { // backoff.go:83: no sleep after last
-            SignalBus.global.emit(Signals.BackoffWaiting, id, "delayMs" -> delay.toMillis.toString)
-            clock.sleep(delay.toMillis)
-            delay = delay * 2 // backoff.go:85-98
-          }
-      }
-    }
-    throw new RuntimeException(s"${id.name}: exhausted $maxAttempts attempts", last)
+    // the wait comes before each retry, so none follows the last attempt (backoff.go:83)
+    Retry.attempts(id, maxAttempts)(body)(attempt = n => if (n > 1) {
+      SignalBus.global.emit(Signals.BackoffWaiting, id, "delayMs" -> delay.toMillis.toString)
+      clock.sleep(delay.toMillis)
+      delay = delay * 2 // backoff.go:85-98
+    })
   }
 }
 
@@ -129,27 +131,24 @@ final case class Timeout(id: StageId, limit: FiniteDuration) {
     * by an external job-group cancel.
     */
   def runOrDeadLetters(df: DataFrame)(body: DataFrame => DataFrame): DataFrame = {
-    val spark = df.sparkSession
     val out = body(df)
+    def deadLetters(msg: String, timeout: Boolean = false, canceled: Boolean = false): DataFrame = {
+      out.unpersist(blocking = false) // partial blocks of the dead attempt
+      ErrorChannel.markWhere(df, id, lit(true), lit(msg), timeout, canceled)
+    }
     try {
       // materialize under the deadline; ON SUCCESS the returned frame is
       // left persisted (that cache IS the materialization the deadline
       // paid for) — callers unpersist() when done with it
-      run(spark) {
+      run(df.sparkSession) {
         out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).count()
         out
       }
     } catch {
       case _: java.util.concurrent.TimeoutException =>
-        out.unpersist(blocking = false) // partial blocks of the dead attempt
-        ErrorChannel.markWhere(ErrorChannel.ensure(df), id, org.apache.spark.sql.functions.lit(true),
-          org.apache.spark.sql.functions.lit(s"exceeded ${limit.toMillis}ms deadline"),
-          timeout = true)
+        deadLetters(s"exceeded ${limit.toMillis}ms deadline", timeout = true)
       case e: org.apache.spark.SparkException if e.getMessage != null && e.getMessage.contains("cancelled") =>
-        out.unpersist(blocking = false)
-        ErrorChannel.markWhere(ErrorChannel.ensure(df), id, org.apache.spark.sql.functions.lit(true),
-          org.apache.spark.sql.functions.lit("job canceled"),
-          canceled = true)
+        deadLetters("job canceled", canceled = true)
     }
   }
 }

@@ -125,16 +125,78 @@ object ErrorChannel {
       df.withColumnRenamed(ColName, as)
     }
 
-  /** Guard a per-row transform so it only applies to healthy rows. */
-  def onGood(df: DataFrame)(colName: String, value: Column): DataFrame =
-    if (!hasChannel(df)) df.withColumn(colName, value)
-    else df.withColumn(colName, guarded(df, colName, value, col(ColName).isNull))
-
-  /** `value` where `ok` holds; elsewhere the column's current value in
-    * `df` (NULL for a new column).
+  /** The one guarded row write behind every row stage. Each output is
+    * `value` on the rows that are healthy (`_err IS NULL`; every row of a
+    * frame without the channel, which does not gain one) and pass the
+    * gate, and the column's prior value (NULL for a new column) on the
+    * rest.
+    *
+    * `read` is evaluated once per row against the INPUT rows and handed
+    * to `outs`: it is the gate when `gated`, else a routing key that
+    * `outs` compiles into its values (Switch). The outputs split into
+    * [[projections]] runs, one `withColumns` each, so a later output
+    * sees an earlier one as chained `withColumn`s would. One run reads
+    * only input values; with more, `read` is pinned to a hidden column
+    * (collision-free, dropped afterwards) so a later run is not gated or
+    * routed by values an earlier run overwrote. `mark`, when given, is
+    * the new `_err`, written in the first run; it must kill exactly the
+    * rows the gate shuts out, so the gate guards the first run only and
+    * later runs read it from `_err` without a pin.
     */
-  def guarded(df: DataFrame, colName: String, value: Column, ok: Column): Column = {
-    val prev: Column = if (df.columns.contains(colName)) col(colName) else lit(null)
-    when(ok, value).otherwise(prev)
+  private[graft] def write(df: DataFrame, read: Option[Column] = None, gated: Boolean = true,
+                           mark: Option[Column] = None)(
+      outs: Column => Seq[(String, Column)]): DataFrame = {
+    var pin = "__graft_pin__"
+    while (df.columns.contains(pin)) pin += "_"
+    // runs are split with `read` as an opaque column: its own references
+    // never end a run, since it is read against the input either way
+    val split = projections(outs(col(pin)))
+    val pinned = read.isDefined && split.size > 1 && mark.isEmpty
+    val r = if (pinned) col(pin) else read.getOrElse(lit(true))
+    val values = outs(r).iterator
+    val runs = split.map(_.map(_ => values.next()))
+    val written = runs.zipWithIndex.foldLeft(if (pinned) df.withColumn(pin, read.get) else df) {
+      case (d, (run, i)) =>
+        val healthy = if (hasChannel(d)) Some(col(ColName).isNull) else None
+        val gate = if (gated && (i == 0 || mark.isEmpty)) read.map(_ => r) else None
+        val guard = (healthy ++ gate).reduceOption(_ && _)
+        val cols = run.map { case (name, value) =>
+          val prior = if (d.columns.contains(name)) col(name) else lit(null)
+          name -> guard.fold(value)(g => when(g, value).otherwise(prior))
+        }
+        val all = (if (i == 0) mark.map(ColName -> _).toSeq else Nil) ++ cols
+        // a ListMap keeps `outs` order for the appended columns
+        if (all.isEmpty) d else d.withColumns(scala.collection.immutable.ListMap(all: _*))
+    }
+    if (pinned) written.drop(pin) else written
+  }
+
+  /** Split `outs` into runs that can share one projection. A run ends
+    * before an output that repeats one of its names (or, in the first run,
+    * `_err`) or may read one of them. Splitting more than needed only
+    * costs a projection, so names compare case-insensitively and an
+    * output whose references cannot be listed (a star) always starts a run.
+    */
+  private[graft] def projections(outs: Seq[(String, Column)]): List[Seq[(String, Column)]] =
+    outs.foldLeft(Vector(Vector.empty[(String, Column)])) { (runs, out) =>
+      val names = runs.last.map(o => lower(o._1)).toSet
+      val clash = names(lower(out._1)) ||
+        (runs.size == 1 && lower(out._1) == lower(ColName))
+      val reads = names.nonEmpty && references(out._2).forall(_.exists(names))
+      if (clash || reads) runs :+ Vector(out) else runs.init :+ (runs.last :+ out)
+    }.toList
+
+  private def lower(s: String): String = s.toLowerCase(java.util.Locale.ROOT)
+
+  /** First name parts of the columns `c` reads; None when it may read any. */
+  private def references(c: Column): Option[Set[String]] = {
+    import org.apache.spark.sql.catalyst.analysis.{Star, UnresolvedAttribute, UnresolvedRegex}
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    val e = org.apache.spark.sql.graft.Bridge.convertedExpression(c)
+    if (e.exists { case _: Star | _: UnresolvedRegex => true; case _ => false }) None
+    else Some(e.collect {
+      case a: UnresolvedAttribute => lower(a.nameParts.head)
+      case a: Attribute => lower(a.name)
+    }.toSet)
   }
 }

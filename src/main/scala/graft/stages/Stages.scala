@@ -9,16 +9,14 @@ import org.apache.spark.sql.functions._
   * fuses it into whole-stage codegen; the closure form lives on
   * `TypedStage.map` (documented slow path).
   *
-  * Each `(name, expr)` pair either replaces or appends a column. On rows
-  * already dead in the error channel the transform is skipped — dead letters
-  * flow through untouched, like the reference short-circuits after failure.
+  * Each `(name, expr)` pair either replaces or appends a column, and a
+  * later pair sees an earlier one. On rows already dead in the error
+  * channel the transform is skipped — dead letters flow through untouched,
+  * like the reference short-circuits after failure. It is
+  * [[ErrorChannel.write]] with no gate.
   */
 final case class Transform(id: StageId, outs: Seq[(String, Column)]) extends Stage {
-  def apply(df: DataFrame): DataFrame =
-    outs.foldLeft(df) { case (d, (name, value)) =>
-      if (ErrorChannel.hasChannel(d)) ErrorChannel.onGood(d)(name, value)
-      else d.withColumn(name, value)
-    }
+  def apply(df: DataFrame): DataFrame = ErrorChannel.write(df)(_ => outs)
 }
 
 object Transform {
@@ -80,69 +78,18 @@ final case class Apply(
 ) extends Stage {
   def apply(df: DataFrame): DataFrame = {
     val ensured = ErrorChannel.ensure(df)
-    val healthy = col(ErrorChannel.ColName).isNull
-    val err = ErrorChannel.ColName -> ErrorChannel.marked(id, errWhen, msg)
-    val runs = Apply.projections(outs)
-    val fused = Apply.project(ensured, runs.head, healthy && !coalesce(errWhen, lit(false)), err)
+    val mark = Some(ErrorChannel.marked(id, errWhen, msg))
     // a nondeterministic errWhen inlined in the guards would run twice per
     // row and could disagree with `_err`: its outputs read the new `_err`
-    val (marked, rest) =
-      if (Apply.deterministicErr(fused)) (fused, runs.tail)
-      else (Apply.project(ensured, Nil, healthy, err), runs)
-    rest.foldLeft(marked)((d, run) => Apply.project(d, run, healthy))
+    if (ensured.select(errWhen).queryExecution.analyzed.expressions.forall(_.deterministic))
+      ErrorChannel.write(ensured, Some(!coalesce(errWhen, lit(false))), mark = mark)(_ => outs)
+    else ErrorChannel.write(ErrorChannel.write(ensured, mark = mark)(_ => Nil))(_ => outs)
   }
 }
 
 object Apply {
   def apply(name: String, errWhen: Column, msg: String)(outs: (String, Column)*): Apply =
     Apply(StageId(name), outs, errWhen, lit(msg))
-
-  private def project(df: DataFrame, outs: Seq[(String, Column)], ok: Column,
-                      marked: (String, Column)*): DataFrame = {
-    val cols = marked ++ outs.map { case (name, value) =>
-      name -> ErrorChannel.guarded(df, name, value, ok)
-    }
-    // a ListMap keeps `outs` order for the appended columns
-    df.withColumns(scala.collection.immutable.ListMap(cols: _*))
-  }
-
-  /** Split `outs` into runs that can share one projection. A run ends
-    * before an output that repeats one of its names (or, in the first run,
-    * `_err`) or may read one of them. Splitting more than needed only
-    * costs a projection, so names compare case-insensitively and an
-    * output whose references cannot be listed (a star) always starts a run.
-    */
-  private[stages] def projections(outs: Seq[(String, Column)]): List[Seq[(String, Column)]] =
-    outs.foldLeft(Vector(Vector.empty[(String, Column)])) { (runs, out) =>
-      val names = runs.last.map(o => lower(o._1)).toSet
-      val clash = names(lower(out._1)) ||
-        (runs.size == 1 && lower(out._1) == lower(ErrorChannel.ColName))
-      val reads = names.nonEmpty && references(out._2).forall(_.exists(names))
-      if (clash || reads) runs :+ Vector(out) else runs.init :+ (runs.last :+ out)
-    }.toList
-
-  /** Whether the `_err` that `df`'s top projection writes is deterministic. */
-  private def deterministicErr(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.expressions.Alias
-    df.queryExecution.analyzed.expressions.forall {
-      case a: Alias if a.name == ErrorChannel.ColName => a.deterministic
-      case _ => true
-    }
-  }
-
-  private def lower(s: String): String = s.toLowerCase(java.util.Locale.ROOT)
-
-  /** First name parts of the columns `c` reads; None when it may read any. */
-  private def references(c: Column): Option[Set[String]] = {
-    import org.apache.spark.sql.catalyst.analysis.{Star, UnresolvedAttribute, UnresolvedRegex}
-    import org.apache.spark.sql.catalyst.expressions.Attribute
-    val e = org.apache.spark.sql.graft.Bridge.convertedExpression(c)
-    if (e.exists { case _: Star | _: UnresolvedRegex => true; case _ => false }) None
-    else Some(e.collect {
-      case a: UnresolvedAttribute => lower(a.nameParts.head)
-      case a: Attribute => lower(a.name)
-    }.toSet)
-  }
 }
 
 /** P3 Effect — side effect observing the stream; data passes through
@@ -181,17 +128,13 @@ object Effect {
 }
 
 /** P4 Mutate — conditional transform `if cond(x) then f(x) else x`
-  * (`mutate.go:35-48`): exactly Spark's conditional projection.
+  * (`mutate.go:35-48`): [[ErrorChannel.write]] gated by `cond`. `cond` is
+  * read once per row, against the input, so a row that matches gets every
+  * output even when one overwrites a column `cond` reads; a NULL `cond`
+  * leaves the row unchanged (NULL for an absent column).
   */
 final case class Mutate(id: StageId, cond: Column, outs: Seq[(String, Column)]) extends Stage {
-  def apply(df: DataFrame): DataFrame =
-    outs.foldLeft(df) { case (d, (name, value)) =>
-      val guarded =
-        if (d.columns.contains(name)) when(cond, value).otherwise(col(name))
-        else when(cond, value) // absent column: null where cond is false
-      if (ErrorChannel.hasChannel(d)) ErrorChannel.onGood(d)(name, guarded)
-      else d.withColumn(name, guarded)
-    }
+  def apply(df: DataFrame): DataFrame = ErrorChannel.write(df, Some(cond))(_ => outs)
 }
 
 object Mutate {
@@ -202,7 +145,8 @@ object Mutate {
 /** P5 Enrich — best-effort enhancement: try a lookup; on miss keep the
   * original value and continue (`enrich.go:38-51`, swallow at
   * `enrich.go:44-47`). The data-parallel form is a left-outer (broadcast
-  * when small) join + `coalesce(enriched, fallback)`.
+  * when small) join, then [[ErrorChannel.write]] of `outs` such as
+  * `coalesce(enriched, fallback)`.
   */
 final case class Enrich(
     id: StageId,
@@ -213,11 +157,7 @@ final case class Enrich(
 ) extends Stage {
   def apply(df: DataFrame): DataFrame = {
     val d = if (broadcastDim) broadcast(dim) else dim
-    val joined = df.join(d, joinCond, "left_outer")
-    val enriched = outs.foldLeft(joined) { case (acc, (name, value)) =>
-      if (ErrorChannel.hasChannel(acc)) ErrorChannel.onGood(acc)(name, value)
-      else acc.withColumn(name, value)
-    }
+    val enriched = ErrorChannel.write(df.join(d, joinCond, "left_outer"))(_ => outs)
     dim.columns.foldLeft(enriched)((acc, c) => acc.drop(d(c)))
   }
 }

@@ -835,16 +835,9 @@ object ScaleBench {
         sec
       }.min
 
-    // loadavg bookends (the Bench.scala round-11 convention): three
-    // separate rounds needed judge adjudication of battery ratios that
-    // re-measured at band on a quiet floor — make residual machine load
+    // loadavg bookends, as Bench stamps them: residual machine load is
     // diagnosable from the artifact itself
-    def loadavg(): String =
-      try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")),
-        java.nio.charset.StandardCharsets.UTF_8).trim.split(" ").take(3).mkString(" ")
-      catch { case _: Throwable => "" }
-    val loadStart = loadavg()
+    val loadStart = graft.Bench.loadavg()
     val rows = queries.map { q =>
       val t1 = time(q, base1x)
       val tN = time(q, out)
@@ -951,7 +944,7 @@ object ScaleBench {
       f""""$q":{"sec_1x":$t1%.2f,"sec_${copies}x":$tN%.2f,"ratio":$r%.2f}"""
     }.mkString("{", ",",
       details.map("," + _).mkString +
-        s""","copies":$copies,"loadavg_start":"$loadStart","loadavg_end":"${loadavg()}"}""")
+        s""","copies":$copies,"loadavg_start":"$loadStart","loadavg_end":"${graft.Bench.loadavg()}"}""")
     println(json)
     spark.stop()
   }

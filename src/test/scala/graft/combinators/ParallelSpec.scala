@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.core._
 import graft.testkit.MockStage
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 class ParallelSpec extends SparkSpec {
   import spark.implicits._
@@ -93,6 +94,46 @@ class ParallelSpec extends SparkSpec {
     awaitReleased(mine, "contest close()")
   }
 
+  private def awaitUncached(frame: => org.apache.spark.sql.DataFrame, what: String): Unit = {
+    val deadline = System.currentTimeMillis + 10000
+    while (System.currentTimeMillis < deadline && frame.storageLevel != StorageLevel.NONE)
+      Thread.sleep(50)
+    assert(frame.storageLevel == StorageLevel.NONE, s"$what: loser still cached at ${frame.storageLevel}")
+  }
+
+  test("Race releases a cancelled loser's cache") {
+    val started = ParallelSpec.slowStarted
+    val sleepy = udf { (id: Long) => ParallelSpec.slowStarted.countDown(); Thread.sleep(30000); id }
+    val slowOut = new java.util.concurrent.atomic.AtomicReference[org.apache.spark.sql.DataFrame]()
+    val slow = Stage(StageId("slow"))(d => {
+      slowOut.set(d.filter(col("id") === 1L).select(sleepy(col("id")).as("slept"))); slowOut.get
+    })
+    // the fast branch finishes only once the slow one is inside its UDF, so
+    // the slow frame is persisted and its job is cancelled mid-flight
+    val fast = Stage(StageId("fast"))(d => {
+      started.await(10, java.util.concurrent.TimeUnit.SECONDS); d.select(lit("x").as("who")).limit(1)
+    })
+    val race = Race("race_loser")(fast, slow)
+    // a range, not a local relation, so the UDF runs in a cancellable task
+    assert(race.run(spark.range(0, 100, 1, 4).toDF()).head().getString(0) == "x")
+    race.close()
+    awaitUncached(slowOut.get, "race")
+  }
+
+  test("Contest releases a branch whose condition threw") {
+    val thrown = new java.util.concurrent.atomic.AtomicReference[org.apache.spark.sql.DataFrame]()
+    val thrower = Stage(StageId("thrower"))(d => {
+      thrown.set(d.withColumn("contest_boom", lit(1))); thrown.get
+    })
+    val ok = Stage(StageId("ok"))(_.limit(3))
+    val contest = Contest("contest_loser", (out: org.apache.spark.sql.DataFrame) =>
+      if (out.columns.contains("contest_boom")) throw new IllegalStateException("boom")
+      else out.count() > 0)(thrower, ok)
+    assert(contest.run(df).count() == 3)
+    contest.close()
+    awaitUncached(thrown.get, "contest")
+  }
+
   test("Race.run fails only when every branch fails (race.go:143-157)") {
     val bad1 = MockStage.failing("b1")
     val bad2 = MockStage.failing("b2")
@@ -179,4 +220,11 @@ class ParallelSpec extends SparkSpec {
     assert(out.count() == 100) // input unchanged
     bad.assertCalled(1)
   }
+}
+
+object ParallelSpec {
+  /** Opened by the sleeping UDF of the Race loser-cache spec; an object
+    * field, so the executor's copy of the UDF reaches the same latch.
+    */
+  val slowStarted = new java.util.concurrent.CountDownLatch(1)
 }

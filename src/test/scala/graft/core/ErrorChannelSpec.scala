@@ -33,7 +33,7 @@ class ErrorChannelSpec extends SparkSpec {
 
   test("dead rows are skipped by onGood transforms") {
     val m = ErrorChannel.markWhere(df, StageId("x"), col("id") === 2, lit("boom"))
-    val t = ErrorChannel.onGood(m)("v", upper(col("v")))
+    val t = ErrorChannel.write(m)(_ => Seq("v" -> upper(col("v"))))
     val vals = t.orderBy("id").select("v").as[String].collect().toSeq
     assert(vals == Seq("A", "", "C")) // row 2 untouched
   }

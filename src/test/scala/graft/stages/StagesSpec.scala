@@ -65,12 +65,16 @@ class StagesSpec extends SparkSpec {
   // --- Apply: one projection for `_err` and the outputs ---
 
   /** The two-projection form Apply replaced: mark `_err`, then guard each
-    * output by the NEW `_err`, one `withColumn` at a time.
+    * output by the NEW `_err`, one `withColumn` at a time. The guard is
+    * written out here, not taken from `ErrorChannel.write`, so Apply is
+    * compared against an independent form.
     */
   private def chainedApply(df: DataFrame, name: String, errWhen: Column, msg: String,
                            outs: (String, Column)*): DataFrame =
     outs.foldLeft(ErrorChannel.markWhere(df, StageId(name), errWhen, lit(msg))) {
-      case (d, (n, v)) => ErrorChannel.onGood(d)(n, v)
+      case (d, (n, v)) =>
+        val prior = if (d.columns.contains(n)) col(n) else lit(null)
+        d.withColumn(n, when(col(ErrorChannel.ColName).isNull, v).otherwise(prior))
     }
 
   test("Apply evaluates a parse shared by errWhen and an output once per row") {
@@ -131,11 +135,32 @@ class StagesSpec extends SparkSpec {
   }
 
   test("Apply shares one projection unless an output reads or repeats an earlier one") {
-    def runs(outs: (String, Column)*) = Apply.projections(outs).map(_.map(_._1))
+    def runs(outs: (String, Column)*) = ErrorChannel.projections(outs).map(_.map(_._1))
     assert(runs("a" -> lit(1), "b" -> col("x"), "c" -> expr("x + 1")) == List(Seq("a", "b", "c")))
     assert(runs("a" -> lit(1), "b" -> expr("A + 1"), "a" -> lit(2), "c" -> col("b")) ==
       List(Seq("a"), Seq("b", "a"), Seq("c")))
     assert(runs("a" -> lit(1), "s" -> struct(col("*"))) == List(Seq("a"), Seq("s")))
     assert(runs("_err" -> lit(null)) == List(Nil, Seq("_err")))
+  }
+
+  // --- Mutate: `cond` is read once per row, against the input ---
+
+  private def mutated(df: DataFrame): Map[Int, (Any, Any)] =
+    Mutate("m", col("a") > 5)("a" -> lit(0), "b" -> lit(1))(df)
+      .collect().map(r => r.getAs[Int]("id") -> ((r.get(r.fieldIndex("a")), r.get(r.fieldIndex("b"))))).toMap
+
+  test("Mutate gives a matching row every output when the first overwrites a column cond reads") {
+    val in = Seq((1, 10), (2, 3)).toDF("id", "a")
+    // cond re-read after `a` became 0 would leave the new column `b` NULL
+    assert(mutated(in) == Map(1 -> ((0, 1)), 2 -> ((3, null))))
+    assert(mutated(ErrorChannel.ensure(in)) == Map(1 -> ((0, 1)), 2 -> ((3, null))))
+  }
+
+  test("Mutate leaves NULL-cond rows and dead rows unchanged") {
+    val in = Seq[(Int, Option[Int], Option[Int])]((1, Some(10), Some(7)), (2, None, Some(8)),
+      (3, Some(10), Some(9))).toDF("id", "a", "b")
+    val dead = ErrorChannel.markWhere(in, StageId("up"), col("id") === 3, lit("upstream"))
+    assert(mutated(dead) == Map(1 -> ((0, 1)), 2 -> ((null, 8)), 3 -> ((10, 9))))
+    assert(ErrorChannel.dead(Mutate("m", col("a") > 5)("a" -> lit(0))(dead)).count() == 1)
   }
 }
